@@ -1,7 +1,7 @@
 # One-command cadence targets (VERDICT r5 #7: the cross-SF sweep must
 # rerun every round, not just when remembered).
 
-.PHONY: test sweep bench lint audit all
+.PHONY: test sweep bench perf lint audit all
 
 test:           ## default suite: every oracle at sf0.01 + unit/property tests
 	python -m pytest tests/ -q
@@ -11,6 +11,11 @@ sweep:          ## cross-SF oracle sweep: every oracle at sf0.001 and sf0.1
 
 bench:          ## headline bench (sf0.1 unless SPARK_GRAFT_SF_DIR overrides)
 	python bench.py
+
+perf:           ## repo benchmark: each BENCHMARK.json workload once (seed 1, untraced) + accessor pins
+	python3 perfbench/run.py --workload query-tail --seed 1 --seconds 9 --trace 0
+	python3 perfbench/run.py --workload etl-lifecycle --seed 1 --seconds 9 --trace 0
+	python -m pytest perfbench/tests -q
 
 lint:           ## generic 100 TB anti-pattern sweep over all registry plans
 	python -m finanalyzer_spark lint --strict

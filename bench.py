@@ -4,7 +4,10 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {name: sec, ...}, "sf": <sf>}
+     "failed": [name, ...], "queries": {name: sec, ...}, "sf": <sf>}
+
+A query that raises is recorded as -1.0, left out of the total, and
+named in `failed` (also in BENCH_QUERIES.json).
 
 Each query is forced end-to-end with a noop write (full computation,
 no driver collect). A warmup pass on sf0.001 triggers JVM/codegen
@@ -193,6 +196,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
     rescued: list[str] = []
+    failed: list[str] = []
     for name in BENCH_QUERIES:
         reps = LOOP_REPS if name in LOOP_FAMILY else REPS
         try:
@@ -218,6 +222,9 @@ def main() -> None:
         except Exception as exc:  # pragma: no cover
             print(f"bench {name} failed: {exc}", file=sys.stderr)
             timings[name] = -1.0
+            # a crash is left out of `total`, so name it: otherwise a
+            # failing query reads as a speedup
+            failed.append(name)
 
     # artifact-build accounting (r13, VERDICT r12 #6): each cold
     # materialized() build ran inside the first rep of some query, but
@@ -251,6 +258,7 @@ def main() -> None:
                            "BENCH_QUERIES.json"), "w") as fh:
         json.dump({"queries": timings, "sf": sf_val, "total_sec": total,
                    "rep_spread": spread, "rescued": sorted(rescued),
+                   "failed": failed,
                    "suite_vs_baseline": vs_base,
                    "methodology": METHODOLOGY,
                    "baseline_file": os.path.basename(BASELINE_FILE)}, fh,
@@ -269,7 +277,8 @@ def main() -> None:
     # the full-precision map always lives in BENCH_QUERIES.json.
     budget = int(os.environ.get("SPARK_GRAFT_BENCH_STDOUT_BUDGET", "1400"))
     top_n = int(os.environ.get("SPARK_GRAFT_BENCH_STDOUT_TOPN", "10"))
-    head = {"metric": "suite_wall_clock", "value": total, "unit": "sec"}
+    head = {"metric": "suite_wall_clock", "value": total, "unit": "sec",
+            "failed": failed}
     if vs_base is not None:
         head["suite_vs_baseline"] = vs_base
 

@@ -18,6 +18,7 @@ import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from .session import tune
 
@@ -44,14 +45,20 @@ DIM_TABLES: frozenset[str] = frozenset({"region", "nation", "supplier"})
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-#: (path, content-fingerprint) -> parquet schema. Schema inference
-#: costs ~65 ms per `read.parquet` call (driver-side footer read);
-#: with ~1-3 tables per query over a ~770-invocation bench suite that
-#: fixed cost is tens of seconds of pure metadata work. A production
-#: catalog keeps schemas in a metastore; this cache is that seam.
-#: Only METADATA is cached — every action still scans the parquet
-#: files — and the key carries (size, mtime_ns) of the data files, so
-#: a regenerated fixture can never serve a stale schema.
+#: path -> (content fingerprint, parquet schema). Schema inference
+#: launches a one-task Spark job per `read.parquet` call (a footer
+#: read); over a ~770-invocation bench suite, or the ~10 store reads of
+#: one ETL daily cycle, that fixed cost is seconds of pure metadata
+#: work. A production catalog keeps schemas in a metastore (Delta in
+#: its transaction log); this cache is that seam. Reads go through
+#: :func:`read_parquet`, and the stores' writers call
+#: :func:`remember_schema`, so a read that follows a write launches no
+#: job at all. On a cluster each avoided job is a remote task launch
+#: plus an object-store footer GET, so the saving grows there. Only
+#: METADATA is cached: every action still scans the parquet files, and
+#: the fingerprint carries (name, size, mtime_ns) of the data files, so
+#: a rewritten path can never serve a stale schema. One entry per path:
+#: a rewrite replaces its entry instead of adding one.
 _SCHEMA_CACHE: dict = {}
 
 
@@ -69,6 +76,53 @@ def _path_fingerprint(p: str) -> tuple:
     return (st.st_size, st.st_mtime_ns)
 
 
+def _cacheable(path: str) -> bool:
+    """Local paths that exist. URI paths (s3a://, hdfs://) and missing
+    paths take the plain read, so its errors stay unchanged."""
+    return "://" not in path and os.path.exists(path)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)` that infers the schema at most once
+    per content of `path` and reads with the cached schema after."""
+    if not _cacheable(path):
+        return spark.read.parquet(path)
+    fp = _path_fingerprint(path)
+    hit = _SCHEMA_CACHE.get(path)
+    if hit is not None and hit[0] == fp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_CACHE[path] = (fp, df.schema)
+    return df
+
+
+def remember_schema(path: str, df: DataFrame) -> None:
+    """Record the schema of `df`, just written (unpartitioned) to
+    `path`, as the entry inference would store: the file source reports
+    every field nullable."""
+    if _cacheable(path):
+        _SCHEMA_CACHE[path] = (_path_fingerprint(path), _as_nullable(df.schema))
+
+
+def forget_schema(path: str) -> None:
+    """Drop the entry of a deleted path."""
+    _SCHEMA_CACHE.pop(path, None)
+
+
+def _as_nullable(t: T.DataType) -> T.DataType:
+    """Spark's `DataType.asNullable`: nullable at every nesting level."""
+    if isinstance(t, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+             for f in t.fields]
+        )
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, T.MapType):
+        return T.MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
+    return t
+
+
 @dataclass
 class Catalog:
     """Lazy loader + view registrar for one scale-factor directory."""
@@ -84,15 +138,7 @@ class Catalog:
         if name not in self._cache:
             if name not in TABLE_NAMES:
                 raise KeyError(f"unknown table {name!r}; have {TABLE_NAMES}")
-            p = self.path(name)
-            key = (p, _path_fingerprint(p))
-            schema = _SCHEMA_CACHE.get(key)
-            if schema is None:
-                df = self.spark.read.parquet(p)
-                _SCHEMA_CACHE[key] = df.schema
-            else:
-                df = self.spark.read.schema(schema).parquet(p)
-            self._cache[name] = _normalize(df)
+            self._cache[name] = _normalize(read_parquet(self.spark, self.path(name)))
         return self._cache[name]
 
     def __getattr__(self, name: str) -> DataFrame:
@@ -119,7 +165,6 @@ def _normalize(df: DataFrame) -> DataFrame:
     division (`div`) — a double roundtrip would lose precision above
     2^53 ns."""
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     for field in df.schema.fields:
         if field.name == "ts" and isinstance(field.dataType, T.LongType):

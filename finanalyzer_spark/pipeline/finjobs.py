@@ -31,6 +31,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import read_parquet, remember_schema
 from ..operators.dedup import dedup_by_key
 from ..operators.ids import positional_ids
 from ..sources.csvseed import read_tickers_csv
@@ -47,7 +48,14 @@ class FinStore:
     The storage seam of the whole pipeline: every job goes through
     read / write / overwrite_atomic / merge / merge_sink, so swapping
     the backend (VersionedFinStore below; Delta in production) is a
-    constructor change, never a job change."""
+    constructor change, never a job change.
+
+    Reads use the schema cache (catalog.read_parquet) and overwrites
+    record the written schema (catalog.remember_schema), so no read in
+    the daily cycle launches a schema-inference job: on a cluster each
+    such job is a remote task launch plus an object-store footer GET.
+    Delta would serve the schema from its transaction log the same
+    way."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -64,10 +72,12 @@ class FinStore:
         )
 
     def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(table))
+        return read_parquet(self.spark, self.path(table))
 
     def write(self, df: DataFrame, table: str, mode: str = "overwrite") -> None:
         df.write.mode(mode).parquet(self.path(table))
+        if mode == "overwrite":
+            remember_schema(self.path(table), df)
 
     def overwrite_atomic(self, df: DataFrame, table: str) -> None:
         """Stage-and-swap overwrite — safe even when `df` reads the

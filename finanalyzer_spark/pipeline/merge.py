@@ -28,12 +28,15 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..catalog import read_parquet, remember_schema
+
 
 def overwrite_atomic(df: DataFrame, path: str) -> None:
     """Overwrite `path` with `df`, staging to a sibling temp dir first
     so a plan that READS `path` can be written back to it (parquet
     self-overwrite guard), and readers never observe a half-written
-    directory."""
+    directory. Records `df`'s schema for the swapped-in path, so the
+    next read of it infers nothing."""
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
     df.write.mode("overwrite").parquet(tmp)
     # Rename-aside swap: park the live dir, promote the staged one, then
@@ -52,6 +55,7 @@ def overwrite_atomic(df: DataFrame, path: str) -> None:
     # merge sink, one rewrite per trigger — otherwise leave them
     # referencing deleted part files
     df.sparkSession.catalog.refreshByPath(path)
+    remember_schema(path, df)
 
 
 def merge_into(
@@ -76,7 +80,10 @@ def merge_into(
 
     Replaying the same source is a no-op on the row set — the property
     at-least-once streaming sinks and restarted batch jobs need.
-    Returns the merged DataFrame (fresh read of the target)."""
+    Returns the merged DataFrame: a fresh read of the target with the
+    schema the write recorded, so neither the read of the target nor
+    the returned frame launches a schema-inference job (on a cluster,
+    each such job is a remote task launch plus a footer GET)."""
     if order_by:
         from ..operators.dedup import dedup_by_key
 
@@ -84,11 +91,11 @@ def merge_into(
     else:
         incoming = source.dropDuplicates(keys)
     if os.path.isdir(target_path):
-        current = spark.read.parquet(target_path)
+        current = read_parquet(spark, target_path)
         merged = current.join(incoming, keys, "left_anti").unionByName(incoming)
     else:
         merged = incoming
     if retain is not None:
         merged = merged.where(retain)
     overwrite_atomic(merged, target_path)
-    return spark.read.parquet(target_path)
+    return read_parquet(spark, target_path)

@@ -38,6 +38,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..catalog import forget_schema, read_parquet, remember_schema
+
 
 class VersionedTable:
     """Snapshot-versioned parquet table rooted at `root`."""
@@ -90,10 +92,11 @@ class VersionedTable:
         current = self.current_version()
         for v in self.versions():
             if v > current:
-                shutil.rmtree(self._snapshot_dir(v))
+                self._drop_snapshot(v)
         version = current + 1
         target = self._snapshot_dir(version)
         df.write.mode("overwrite").parquet(target)
+        remember_schema(target, df)
         tmp = self._pointer + ".tmp"
         with open(tmp, "w") as fh:
             fh.write(str(version))
@@ -112,7 +115,7 @@ class VersionedTable:
                 f"version {v} of {self.root} is gone (vacuumed?); "
                 f"retained: {self.versions()}"
             )
-        return self.spark.read.parquet(path)
+        return read_parquet(self.spark, path)
 
     # -- transactional batch tracking (Delta's txn appId/version) ----------
     @property
@@ -288,6 +291,11 @@ class VersionedTable:
         for v in self.versions():
             if current - keep_last < v <= current:
                 continue
-            shutil.rmtree(self._snapshot_dir(v))
+            self._drop_snapshot(v)
             removed.append(v)
         return removed
+
+    def _drop_snapshot(self, version: int) -> None:
+        path = self._snapshot_dir(version)
+        shutil.rmtree(path)
+        forget_schema(path)

@@ -81,19 +81,23 @@ def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSes
         except Exception:
             pass  # non-runtime conf on this build — builder-time only
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    # PySpark caches the dataFrameDebugging conf in a module global at
-    # the FIRST wrapped API call; a driver-owned session may have made
-    # wrapped calls before handing the session to us, in which case the
-    # conf.set above comes too late for this process — sync the public
-    # conf's cached value directly so the per-call capture stops either
-    # way (pyspark.errors.utils reads the same conf; this is its
-    # documented cache, not behavior divergence).
+    # The dataFrameDebugging conf is a STATIC conf, so the conf.set above
+    # is refused on a session built without it (any driver-owned one).
+    # Write it to this session's SQLConf, which skips the static check,
+    # so the public conf reports what is in force. PySpark also caches
+    # the conf in a module global at the FIRST wrapped API call; a
+    # driver-owned session may have made wrapped calls before handing
+    # the session to us, so set the cached value too and the per-call
+    # capture stops either way. tests/test_session.py pins both.
+    debugging = "spark.python.sql.dataFrameDebugging.enabled"
     try:
-        from pyspark.errors import utils as _pyspark_err_utils
-
-        _pyspark_err_utils._enable_debugging_cache = False
-    except Exception:  # pragma: no cover - future pyspark refactor
+        if spark.conf.get(debugging) != "false":
+            spark._jsparkSession.sessionState().conf().setConfString(debugging, "false")
+    except Exception:  # pragma: no cover - a PySpark without the conf
         pass
+    from pyspark.errors import utils as _pyspark_err_utils
+
+    _pyspark_err_utils._enable_debugging_cache = False
     spark._finanalyzer_tuned = n
     return spark
 

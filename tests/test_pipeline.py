@@ -238,3 +238,143 @@ def test_latest_fundamentals_asof(store, tickers_csv):
         F.col("date_value") < (TODAY - dt.timedelta(days=3)).isoformat()
     )
     assert early.where(F.col("currentPrice").isNotNull()).count() == 0
+
+
+# -- schema cache on the store read path -------------------------------------
+
+
+def _live_dir(store, table: str) -> str:
+    import os
+
+    from finanalyzer_spark.pipeline.finjobs import VersionedFinStore
+
+    if isinstance(store, VersionedFinStore):
+        t = store.table(table)
+        return os.path.join(t.root, f"v={t.current_version()}")
+    return store.path(table)
+
+
+def _jobs_started(spark, fn):
+    """(result of fn(), number of Spark jobs fn started), counted in a
+    job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"schema-cache-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("backend", ["plain", "versioned"])
+def test_store_reads_match_inferred_schema_over_lifecycle(
+    spark, tickers_csv, tmp_path, backend
+):
+    """A store read uses the schema its writer recorded; it must equal
+    the schema Spark infers from the live files, after the full fill
+    and after each daily cycle."""
+    from finanalyzer_spark.catalog import _SCHEMA_CACHE
+    from finanalyzer_spark.pipeline.finjobs import (
+        VersionedFinStore,
+        update_fundamentals,
+    )
+
+    cls = VersionedFinStore if backend == "versioned" else FinStore
+    store = cls(spark, str(tmp_path / backend))
+    feed = FakeFeed()
+
+    def check(tables):
+        for t in tables:
+            live = _live_dir(store, t)
+            inferred = spark.read.parquet(live).schema.json()
+            assert store.read(t).schema.json() == inferred, t
+            # the recorded entry itself is what inference would store
+            assert _SCHEMA_CACHE[live][1].json() == inferred, t
+
+    bootstrap_registry(store, tickers_csv)
+    fill_all_history(store, TODAY, feed)
+    check(["names", "history"])
+    for day in (2, 4):
+        today = TODAY + dt.timedelta(days=day)
+        update_history(store, today, feed)
+        update_fundamentals(store, today, feed)
+        check(["names", "history", "fundamentals"])
+
+
+def test_schema_cache_sees_out_of_band_rewrite(spark, tmp_path):
+    """A write records what inference would store, non-nullable and
+    nested fields included; a path rewritten behind the store's back,
+    with another schema, is re-inferred on the next read; missing
+    tables keep the plain read's error."""
+    from pyspark.errors import AnalysisException
+
+    from finanalyzer_spark.catalog import _SCHEMA_CACHE, read_parquet
+
+    store = FinStore(spark, str(tmp_path / "w"))
+    written = spark.range(2).select(
+        F.col("id").alias("k"),
+        F.array("id").alias("a"),
+        F.struct(F.lit("x").alias("s")).alias("st"),
+        F.create_map(F.lit("m"), F.col("id")).alias("m"),
+    )
+    store.write(written, "t")
+    inferred = spark.read.parquet(store.path("t")).schema.json()
+    assert _SCHEMA_CACHE[store.path("t")][1].json() == inferred
+    assert store.read("t").schema.json() == inferred
+    other = spark.createDataFrame([(1.5, 2, True)], "x double, y int, z boolean")
+    other.write.mode("overwrite").parquet(store.path("t"))
+    got = read_parquet(spark, store.path("t"))
+    assert got.schema.json() == spark.read.parquet(store.path("t")).schema.json()
+    assert got.columns == ["x", "y", "z"]
+    assert store.read("t").collect()[0]["y"] == 2
+    with pytest.raises(AnalysisException):
+        store.read("missing")
+
+
+@pytest.mark.parametrize("backend", ["plain", "versioned"])
+def test_reads_after_merge_start_no_jobs(
+    spark, tickers_csv, tmp_path, monkeypatch, backend
+):
+    """After a merge, store reads and the frames the merge itself reads
+    and returns are planned from the recorded schema: no Spark job
+    (no schema-inference footer read) while they are built."""
+    from finanalyzer_spark.pipeline import merge, versioned
+    from finanalyzer_spark.pipeline.finjobs import (
+        VersionedFinStore,
+        update_fundamentals,
+    )
+
+    cls = VersionedFinStore if backend == "versioned" else FinStore
+    store = cls(spark, str(tmp_path / backend))
+    feed = FakeFeed()
+    bootstrap_registry(store, tickers_csv)
+    fill_all_history(store, TODAY, feed)
+    update_fundamentals(store, TODAY, feed)
+
+    merge_reads = []
+    for mod in (merge, versioned):
+        real = mod.read_parquet
+
+        def counted(spark_, path, real=real):
+            df, jobs = _jobs_started(spark_, lambda: real(spark_, path))
+            merge_reads.append(jobs)
+            return df
+
+        monkeypatch.setattr(mod, "read_parquet", counted)
+    today = TODAY + dt.timedelta(days=2)
+    update_history(store, today, feed)
+    update_fundamentals(store, today, feed)
+    monkeypatch.undo()
+    # plain: the target read and the returned frame of each merge;
+    # versioned: every snapshot read, which is those two per merge plus
+    # the jobs' own store reads (names, then history or fundamentals)
+    assert merge_reads == [0] * (4 if backend == "plain" else 8)
+
+    for table in ("history", "fundamentals"):
+        df, jobs = _jobs_started(spark, lambda: store.read(table))
+        assert jobs == 0, table
+        assert df.count() > 0

@@ -47,6 +47,7 @@ def test_vacuum_retention_and_time_travel_horizon(spark, tmp_path):
     t = VersionedTable(spark, str(tmp_path / "t"))
     for i in range(1, 4):
         t.commit(_df(spark, i))
+    assert {r["x"] for r in t.read(version=1).collect()} == {1}  # cached schema
     removed = t.vacuum(keep_last=2)
     assert removed == [1]
     assert t.versions() == [2, 3]
@@ -378,3 +379,28 @@ def test_delete_where_txn_idempotent(spark, tmp_path):
     v1 = t.delete_where("uid = 1", txn_id=7)
     v2 = t.delete_where("uid = 1", txn_id=7)  # redelivery: no new snapshot
     assert v1 == v2 == t.current_version()
+
+
+def test_schema_cache_holds_one_entry_per_live_path(spark, tmp_path):
+    """Repeated merges into one path replace its schema-cache entry
+    rather than adding one each; vacuum drops the entries of the
+    snapshot directories it deletes."""
+    from finanalyzer_spark.catalog import _SCHEMA_CACHE
+    from finanalyzer_spark.pipeline.merge import merge_into
+
+    def entries(prefix):
+        return sorted(k for k in _SCHEMA_CACHE if k.startswith(prefix))
+
+    target = str(tmp_path / "merged")
+    for i in range(20):
+        merge_into(spark, target, _df(spark, i % 7), ["x"])
+    assert entries(target) == [target]
+    merged = merge_into(spark, target, _df(spark, 0), ["x"])
+    assert {r["x"] for r in merged.collect()} == set(range(7))
+
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    for i in range(5):
+        t.commit(_df(spark, i))
+    assert len(entries(t.root)) == 5
+    assert t.vacuum(keep_last=2) == [1, 2, 3]
+    assert entries(t.root) == [os.path.join(t.root, f"v={v}") for v in (4, 5)]
