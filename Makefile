@@ -3,8 +3,9 @@
 
 .PHONY: test sweep bench perf lint audit all
 
-test:           ## default suite: every oracle at sf0.01 + unit/property tests
-	python -m pytest tests/ -q
+test:           ## tier-1 suite: every oracle at sf0.01 + unit/property tests
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 sweep:          ## cross-SF oracle sweep: every oracle at sf0.001 and sf0.1
 	python -m pytest -m sweep tests/test_sweep.py -q

@@ -74,7 +74,9 @@ def connected_components(
     `component` is the minimum node id of the connected component.
 
     Exact (runs to fixpoint; `max_iter` is a safety bound — with
-    pointer jumping 25 rounds covers graphs of diameter ~2^25).
+    pointer jumping 25 rounds covers graphs of diameter ~2^25). A
+    loop that exhausts `max_iter` raises RuntimeError rather than
+    return unconverged labels.
 
     Per round (the kcore/label-prop discipline, r10): the label frame
     — one row per node, shrinking in label cardinality — is
@@ -172,6 +174,12 @@ def connected_components(
         if s == prev_sum:
             break
         prev_sum = s
+    else:
+        sym.unpersist()
+        raise RuntimeError(
+            f"connected_components: max_iter={max_iter} rounds ended "
+            "before the labels reached their fixpoint"
+        )
 
     sym.unpersist()
     return labels.select("node", F.col("label").alias("component"))

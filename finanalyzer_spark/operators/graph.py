@@ -18,8 +18,6 @@ no checkpointing; an open-ended convergence loop would add the
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -229,9 +227,9 @@ def kcore(
     Returns a (node,) DataFrame. Termination: node count is
     monotonically non-increasing and integer — at most |V| rounds;
     `max_iters` is a backstop, not a tuning knob. If the backstop
-    trips (only possible when max_iters < peel depth), the result may
-    not have converged — a RuntimeWarning is raised rather than
-    silently returning the partial core.
+    trips (only possible when max_iters < peel depth), the peel has
+    not converged, so kcore raises RuntimeError rather than return a
+    partial core.
     """
     e = edges_sym.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
@@ -269,14 +267,11 @@ def kcore(
             .join(keep_b.withColumnRenamed("node", "dst"), "dst", "left_semi")
             .localCheckpoint()
         )
-    warnings.warn(
+    raise RuntimeError(
         f"kcore: max_iters={max_iters} exhausted before the peel "
-        "converged; the returned node set may be a superset of the "
-        f"true {k}-core",
-        RuntimeWarning,
-        stacklevel=2,
+        "converged; the surviving node set may be a superset of the "
+        f"true {k}-core"
     )
-    return keep
 
 
 def hits_fixed(

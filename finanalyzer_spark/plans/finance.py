@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..operators.ids import positional_ids
 from ..operators.rank import ordered_scan
+from .daily import daily_revenue, daily_revenue_sql
 from .registry import query
 
 
@@ -901,12 +902,8 @@ def vwap_premium(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cusum_changepoint",
-    oracle="""
-    WITH daily AS (
-        SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS d,
-               sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS x
-        FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({daily_revenue_sql("x")}),
     s AS (
         SELECT d, x,
                row_number() OVER (ORDER BY d) AS k,
@@ -949,14 +946,7 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     grand total ride along as exact literals. Tie-break on earliest
     day makes the argmax deterministic."""
     t = load(spark, sf_dir)
-    daily = (
-        t.orders.select(
-            F.to_date(F.date_trunc("day", "o_orderdate")).alias("d"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("x"))
-    )
+    daily = daily_revenue(t.orders, "x")
     s = ordered_scan(
         daily,
         ["d"],
@@ -1772,12 +1762,8 @@ def fisher_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # integer mean of the changes at or below it. The d <= var
     # comparison is integer-vs-identical-double, so membership in the
     # tail is deterministic on both engines.
-    oracle="""
-    WITH daily AS (
-        SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS d,
-               sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS y
-        FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({daily_revenue_sql("y")}),
     diffs AS (
         SELECT y - lag(y) OVER (ORDER BY d) AS dy FROM daily
         QUALIFY dy IS NOT NULL
@@ -1810,16 +1796,7 @@ def var_cvar_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.percentiles import grouped_exact_percentiles
 
     t = load(spark, sf_dir)
-    daily = (
-        t.orders.select(
-            F.to_date(F.date_trunc("day", "o_orderdate")).alias("d"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("long").alias(
-                "cents"
-            ),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("y"))
-    )
+    daily = daily_revenue(t.orders, "y")
     diffs = (
         daily.select(
             (F.col("y") - F.lag("y").over(W.orderBy("d"))).alias("dy")
@@ -1868,11 +1845,7 @@ _GUMBEL_T = 52  #: return period in blocks (weeks) — one trading year
     # Mascheroni literal is interpolated into both from the same
     # Python float, so the IEEE arithmetic matches bit for bit).
     oracle=f"""
-    WITH daily AS (
-        SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS d,
-               sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS y
-        FROM orders GROUP BY 1
-    ),
+    WITH daily AS ({daily_revenue_sql("y")}),
     blocks AS (
         SELECT date_trunc('week', d) AS w, max(y) AS m
         FROM daily GROUP BY 1
@@ -1921,16 +1894,7 @@ def gumbel_weekly_max_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates — no windows at all), one exact-DECIMAL moment pass
     over the ~n_weeks-row block frame, scalar double arithmetic."""
     t = load(spark, sf_dir)
-    daily = (
-        t.orders.select(
-            F.to_date(F.date_trunc("day", "o_orderdate")).alias("d"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("long").alias(
-                "cents"
-            ),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("y"))
-    )
+    daily = daily_revenue(t.orders, "y")
     blocks = daily.groupBy(F.date_trunc("week", "d").alias("w")).agg(
         F.max("y").alias("m")
     )

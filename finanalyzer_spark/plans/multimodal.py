@@ -40,7 +40,7 @@ PPM_HEADER = f"P6\n{PPM_DIM} {PPM_DIM}\n255\n"
 
 def _doc_image(text: str):
     """Document text -> (w, (8, w, 3) uint8 image) for the codec
-    round-trip queries (media_qoi/tiff/png_pixel_stats).
+    round-trip queries (`_pixel_stats_query`).
 
     The DuckDB oracle twins compute w and pixel sums from CHARACTER
     counts while this kernel uses utf-8 BYTES, and the reshape needs at
@@ -65,6 +65,90 @@ def _doc_image(text: str):
         )
     img = np.frombuffer(bs[: w * 24], dtype=np.uint8).reshape(8, w, 3)
     return w, img
+
+
+#: Oracle of every lossless image round trip: the decoded-pixel stats
+#: must equal stats of the SOURCE characters, so one mis-decoded byte
+#: anywhere in a codec (op stream, run length, filter, plane order,
+#: channel swap) shifts px_sum and breaks the hash. w = min(len//24, 64)
+#: with all fixture docs >= 47 chars; the image is the first w*24
+#: bytes as (8, w, 3).
+_PIXEL_STATS_ORACLE = """
+    WITH d AS (
+        SELECT doc_id,
+               greatest(1, least(length(text) // 24, 64)) AS w
+        FROM documents
+    ),
+    px AS (
+        SELECT doc_id, w,
+               list_transform(
+                   string_split_regex(
+                       substr(text, 1, w * 24), ''),
+                   c -> ascii(c)) AS bs
+        FROM d JOIN documents USING (doc_id)
+    )
+    SELECT doc_id AS media_id,
+           CAST(w AS INT) AS width,
+           8 AS height,
+           CAST(w * 8 AS BIGINT) AS n_pixels,
+           CAST(list_sum(bs) AS BIGINT) AS px_sum,
+           CAST(list_max(bs) AS INT) AS px_max
+    FROM px
+    """
+
+
+def _pixel_stats_query(name, codec, roundtrip, tags, doc):
+    """Register `name`: each document's `_doc_image` goes through
+    `roundtrip(module, img)`, where `module` is operators.<codec>, and
+    the stats of the DECODED array are checked against
+    `_PIXEL_STATS_ORACLE`. The codec is imported inside the Python
+    worker, so importing this package does not load it."""
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        t = load(spark, sf_dir)
+        docs = t.documents.select("doc_id", "text")
+
+        def kernel(batches):
+            import importlib
+
+            import numpy as np
+            import pandas as pd
+
+            c = importlib.import_module(f"..operators.{codec}", __package__)
+            for pdf in batches:
+                rows = []
+                for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                    w, img = _doc_image(text)
+                    dec = roundtrip(c, img)
+                    rows.append(
+                        {
+                            "media_id": int(doc_id),
+                            "width": w,
+                            "height": 8,
+                            "n_pixels": int(dec.shape[0] * dec.shape[1]),
+                            "px_sum": int(dec.astype(np.int64).sum()),
+                            "px_max": int(dec.max()),
+                        }
+                    )
+                yield pd.DataFrame(
+                    rows,
+                    columns=[
+                        "media_id", "width", "height", "n_pixels",
+                        "px_sum", "px_max",
+                    ],
+                )
+
+        return docs.repartition(8).mapInPandas(
+            kernel,
+            schema=(
+                "media_id long, width int, height int, n_pixels long,"
+                " px_sum long, px_max int"
+            ),
+        )
+
+    build.__name__ = build.__qualname__ = name
+    build.__doc__ = doc
+    query(name, oracle=_PIXEL_STATS_ORACLE, tags=tags)(build)
 
 
 def _media(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1316,249 +1400,53 @@ def media_h264_bframe_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+_pixel_stats_query(
     "media_qoi_pixel_stats",
-    # the decoded-pixel stats must equal stats of the SOURCE bytes —
-    # QOI is lossless, so a single mis-decoded pixel anywhere in the
-    # op stream (diff bias, luma arithmetic, cache slot, run length)
-    # shifts px_sum and breaks the hash.  w = min(len//24, 64) with
-    # all fixture docs >= 47 chars, image = first w*24 bytes as
-    # (8, w, 3).
-    oracle="""
-    WITH d AS (
-        SELECT doc_id,
-               greatest(1, least(length(text) // 24, 64)) AS w
-        FROM documents
-    ),
-    px AS (
-        SELECT doc_id, w,
-               list_transform(
-                   string_split_regex(
-                       substr(text, 1, w * 24), ''),
-                   c -> ascii(c)) AS bs
-        FROM d JOIN documents USING (doc_id)
-    )
-    SELECT doc_id AS media_id,
-           CAST(w AS INT) AS width,
-           8 AS height,
-           CAST(w * 8 AS BIGINT) AS n_pixels,
-           CAST(list_sum(bs) AS BIGINT) AS px_sum,
-           CAST(list_max(bs) AS INT) AS px_max
-    FROM px
-    """,
+    "qoi",
+    lambda c, img: c.decode_qoi(c.encode_qoi(img)),
     tags=("multimodal", "codec", "qoi"),
-)
-def media_qoi_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image-codec round trip through QOI (operators/qoi.py):
+    doc="""REAL image-codec round trip through QOI (operators/qoi.py):
     each document's leading bytes become an (8, w, 3) image, encode
     to a genuine QOI byte stream, decode with the exact-or-refuse
     decoder, and report pixel stats computed from the DECODED array —
     the oracle recomputes them from the source characters, so the
     hash certifies losslessness through the full op-code mix the
     text-derived images produce (runs on repeated words, small diffs,
-    cache hits, raw RGB jumps)."""
-    t = load(spark, sf_dir)
-    docs = t.documents.select("doc_id", "text")
-
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        from ..operators.qoi import decode_qoi, encode_qoi
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w, img = _doc_image(text)
-                dec = decode_qoi(encode_qoi(img))
-                rows.append(
-                    {
-                        "media_id": int(doc_id),
-                        "width": w,
-                        "height": 8,
-                        "n_pixels": int(dec.shape[0] * dec.shape[1]),
-                        "px_sum": int(dec.astype(np.int64).sum()),
-                        "px_max": int(dec.max()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_pixels",
-                    "px_sum", "px_max",
-                ],
-            )
-
-    return docs.repartition(8).mapInPandas(
-        kernel,
-        schema=(
-            "media_id long, width int, height int, n_pixels long,"
-            " px_sum long, px_max int"
-        ),
-    )
-
-
-@query(
-    "media_tiff_pixel_stats",
-    # identical oracle discipline to media_qoi_pixel_stats: decoded
-    # pixels must equal the source characters, so the hash certifies
-    # the WHOLE baseline-TIFF path (IFD layout, strip tables, LZW
-    # EarlyChange bit unpacking, horizontal-differencing predictor)
-    # end-to-end losslessly.
-    oracle="""
-    WITH d AS (
-        SELECT doc_id,
-               greatest(1, least(length(text) // 24, 64)) AS w
-        FROM documents
-    ),
-    px AS (
-        SELECT doc_id, w,
-               list_transform(
-                   string_split_regex(
-                       substr(text, 1, w * 24), ''),
-                   c -> ascii(c)) AS bs
-        FROM d JOIN documents USING (doc_id)
-    )
-    SELECT doc_id AS media_id,
-           CAST(w AS INT) AS width,
-           8 AS height,
-           CAST(w * 8 AS BIGINT) AS n_pixels,
-           CAST(list_sum(bs) AS BIGINT) AS px_sum,
-           CAST(list_max(bs) AS INT) AS px_max
-    FROM px
-    """,
-    tags=("multimodal", "codec", "tiff"),
+    cache hits, raw RGB jumps).""",
 )
-def media_tiff_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Baseline-TIFF round trip (operators/tiff.py): document bytes →
+
+
+_pixel_stats_query(
+    "media_tiff_pixel_stats",
+    "tiff",
+    lambda c, img: c.decode_tiff(
+        c.encode_tiff(img, compression=5, predictor=2)
+    ),
+    tags=("multimodal", "codec", "tiff"),
+    doc="""Baseline-TIFF round trip (operators/tiff.py): document bytes →
     (8, w, 3) image → TIFF with LZW compression AND the horizontal-
     differencing predictor (the hardest baseline path) → decode →
     pixel stats, with the oracle recomputing the stats from source
     characters — one wrong byte anywhere in the strip/LZW/predictor
-    machinery breaks the hash."""
-    t = load(spark, sf_dir)
-    docs = t.documents.select("doc_id", "text")
-
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        from ..operators.tiff import decode_tiff, encode_tiff
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w, img = _doc_image(text)
-                dec = decode_tiff(
-                    encode_tiff(img, compression=5, predictor=2)
-                )
-                rows.append(
-                    {
-                        "media_id": int(doc_id),
-                        "width": w,
-                        "height": 8,
-                        "n_pixels": int(dec.shape[0] * dec.shape[1]),
-                        "px_sum": int(dec.astype(np.int64).sum()),
-                        "px_max": int(dec.max()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_pixels",
-                    "px_sum", "px_max",
-                ],
-            )
-
-    return docs.repartition(8).mapInPandas(
-        kernel,
-        schema=(
-            "media_id long, width int, height int, n_pixels long,"
-            " px_sum long, px_max int"
-        ),
-    )
-
-
-@query(
-    "media_png_pixel_stats",
-    # identical oracle discipline to media_qoi/tiff_pixel_stats: the
-    # decoded pixels must equal the source characters, so the hash
-    # certifies the WHOLE PNG path (chunk CRCs, DEFLATE via stdlib
-    # zlib, the adaptive per-row filter choice and all five filter
-    # reconstructions) end-to-end losslessly.  The codec itself is
-    # additionally certified against genuinely foreign stdlib files
-    # and a cross-format TIFF check in tests/test_png.py.
-    oracle="""
-    WITH d AS (
-        SELECT doc_id,
-               greatest(1, least(length(text) // 24, 64)) AS w
-        FROM documents
-    ),
-    px AS (
-        SELECT doc_id, w,
-               list_transform(
-                   string_split_regex(
-                       substr(text, 1, w * 24), ''),
-                   c -> ascii(c)) AS bs
-        FROM d JOIN documents USING (doc_id)
-    )
-    SELECT doc_id AS media_id,
-           CAST(w AS INT) AS width,
-           8 AS height,
-           CAST(w * 8 AS BIGINT) AS n_pixels,
-           CAST(list_sum(bs) AS BIGINT) AS px_sum,
-           CAST(list_max(bs) AS INT) AS px_max
-    FROM px
-    """,
-    tags=("multimodal", "codec", "png"),
+    machinery breaks the hash.""",
 )
-def media_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full-tier PNG round trip (operators/png.py): document bytes →
+
+
+# The PNG codec is also certified against foreign stdlib files and a
+# cross-format TIFF check in tests/test_png.py.
+_pixel_stats_query(
+    "media_png_pixel_stats",
+    "png",
+    lambda c, img: c.decode_png(c.encode_png(img)),
+    tags=("multimodal", "codec", "png"),
+    doc="""Full-tier PNG round trip (operators/png.py): document bytes →
     (8, w, 3) image → non-interlaced RGB8 PNG via the adaptive
     minimum-residual filter chooser (text-derived images make it mix
     None/Sub/Up/Average/Paeth rows) → exact-or-refuse decode with
     CRC verification → pixel stats, with the oracle recomputing the
     stats from the source characters — one wrong byte anywhere in
-    the filter algebra or chunk plumbing breaks the hash."""
-    t = load(spark, sf_dir)
-    docs = t.documents.select("doc_id", "text")
-
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        from ..operators.png import decode_png, encode_png
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w, img = _doc_image(text)
-                dec = decode_png(encode_png(img))
-                rows.append(
-                    {
-                        "media_id": int(doc_id),
-                        "width": w,
-                        "height": 8,
-                        "n_pixels": int(dec.shape[0] * dec.shape[1]),
-                        "px_sum": int(dec.astype(np.int64).sum()),
-                        "px_max": int(dec.max()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_pixels",
-                    "px_sum", "px_max",
-                ],
-            )
-
-    return docs.repartition(8).mapInPandas(
-        kernel,
-        schema=(
-            "media_id long, width int, height int, n_pixels long,"
-            " px_sum long, px_max int"
-        ),
-    )
+    the filter algebra or chunk plumbing breaks the hash.""",
+)
 
 
 def _sql_int_list(values) -> str:
@@ -1951,38 +1839,12 @@ def media_exr_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
+_pixel_stats_query(
     "media_tga_pixel_stats",
-    # identical oracle discipline to media_qoi_pixel_stats: the
-    # decoded-pixel stats must equal stats of the SOURCE characters —
-    # TGA RLE is lossless, so one wrong run length, packet boundary or
-    # BGR swap anywhere shifts px_sum and breaks the hash.
-    oracle="""
-    WITH d AS (
-        SELECT doc_id,
-               greatest(1, least(length(text) // 24, 64)) AS w
-        FROM documents
-    ),
-    px AS (
-        SELECT doc_id, w,
-               list_transform(
-                   string_split_regex(
-                       substr(text, 1, w * 24), ''),
-                   c -> ascii(c)) AS bs
-        FROM d JOIN documents USING (doc_id)
-    )
-    SELECT doc_id AS media_id,
-           CAST(w AS INT) AS width,
-           8 AS height,
-           CAST(w * 8 AS BIGINT) AS n_pixels,
-           CAST(list_sum(bs) AS BIGINT) AS px_sum,
-           CAST(list_max(bs) AS INT) AS px_max
-    FROM px
-    """,
+    "tga",
+    lambda c, img: c.decode_tga(c.encode_tga(img, rle=True)),
     tags=("multimodal", "codec", "tga"),
-)
-def media_tga_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image-codec round trip through Truevision TGA
+    doc="""REAL image-codec round trip through Truevision TGA
     (operators/tga.py): each document's leading bytes become an
     (8, w, 3) image, encode to a genuine type-10 RLE TGA byte stream
     (bottom-up storage handled by the top-origin flag, BGR channel
@@ -1990,160 +1852,32 @@ def media_tga_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     report pixel stats computed from the DECODED array — the oracle
     recomputes them from the source characters, so the hash certifies
     losslessness through the run/raw packet mix the text-derived
-    images produce."""
-    t = load(spark, sf_dir)
-    docs = t.documents.select("doc_id", "text")
-
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        from ..operators.tga import decode_tga, encode_tga
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w, img = _doc_image(text)
-                dec = decode_tga(encode_tga(img, rle=True))
-                rows.append(
-                    {
-                        "media_id": int(doc_id),
-                        "width": w,
-                        "height": 8,
-                        "n_pixels": int(dec.shape[0] * dec.shape[1]),
-                        "px_sum": int(dec.astype(np.int64).sum()),
-                        "px_max": int(dec.max()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_pixels",
-                    "px_sum", "px_max",
-                ],
-            )
-
-    return docs.repartition(8).mapInPandas(
-        kernel,
-        schema=(
-            "media_id long, width int, height int, n_pixels long,"
-            " px_sum long, px_max int"
-        ),
-    )
-
-
-@query(
-    "media_pcx_pixel_stats",
-    # identical oracle discipline to the QOI/TIFF/PNG/TGA round trips:
-    # decoded pixels must equal the source characters — one wrong RLE
-    # run, plane interleave or pad byte shifts px_sum and breaks the
-    # hash.
-    oracle="""
-    WITH d AS (
-        SELECT doc_id,
-               greatest(1, least(length(text) // 24, 64)) AS w
-        FROM documents
-    ),
-    px AS (
-        SELECT doc_id, w,
-               list_transform(
-                   string_split_regex(
-                       substr(text, 1, w * 24), ''),
-                   c -> ascii(c)) AS bs
-        FROM d JOIN documents USING (doc_id)
-    )
-    SELECT doc_id AS media_id,
-           CAST(w AS INT) AS width,
-           8 AS height,
-           CAST(w * 8 AS BIGINT) AS n_pixels,
-           CAST(list_sum(bs) AS BIGINT) AS px_sum,
-           CAST(list_max(bs) AS INT) AS px_max
-    FROM px
-    """,
-    tags=("multimodal", "codec", "pcx"),
+    images produce.""",
 )
-def media_pcx_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image-codec round trip through ZSoft PCX
+
+
+_pixel_stats_query(
+    "media_pcx_pixel_stats",
+    "pcx",
+    lambda c, img: c.decode_pcx(c.encode_pcx(img)),
+    tags=("multimodal", "codec", "pcx"),
+    doc="""REAL image-codec round trip through ZSoft PCX
     (operators/pcx.py): each document's leading bytes become an
     (8, w, 3) image, encode to a genuine version-5 truecolor PCX
     (8-bit, 3 planes, per-row RLE with even bytes_per_line padding),
     decode with the exact-or-refuse decoder, and report pixel stats
     from the DECODED array — the oracle recomputes them from the
     source characters, so the hash certifies losslessness through the
-    per-plane RLE and the pad-byte handling."""
-    t = load(spark, sf_dir)
-    docs = t.documents.select("doc_id", "text")
-
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        from ..operators.pcx import decode_pcx, encode_pcx
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w, img = _doc_image(text)
-                dec = decode_pcx(encode_pcx(img))
-                rows.append(
-                    {
-                        "media_id": int(doc_id),
-                        "width": w,
-                        "height": 8,
-                        "n_pixels": int(dec.shape[0] * dec.shape[1]),
-                        "px_sum": int(dec.astype(np.int64).sum()),
-                        "px_max": int(dec.max()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_pixels",
-                    "px_sum", "px_max",
-                ],
-            )
-
-    return docs.repartition(8).mapInPandas(
-        kernel,
-        schema=(
-            "media_id long, width int, height int, n_pixels long,"
-            " px_sum long, px_max int"
-        ),
-    )
-
-
-@query(
-    "media_ico_pixel_stats",
-    # identical oracle discipline to the QOI/TIFF/PNG/TGA/PCX round
-    # trips: decoded pixels must equal the source characters — a wrong
-    # AND-mask stride, bottom-up flip or BGRA swap shifts px_sum and
-    # breaks the hash.
-    oracle="""
-    WITH d AS (
-        SELECT doc_id,
-               greatest(1, least(length(text) // 24, 64)) AS w
-        FROM documents
-    ),
-    px AS (
-        SELECT doc_id, w,
-               list_transform(
-                   string_split_regex(
-                       substr(text, 1, w * 24), ''),
-                   c -> ascii(c)) AS bs
-        FROM d JOIN documents USING (doc_id)
-    )
-    SELECT doc_id AS media_id,
-           CAST(w AS INT) AS width,
-           8 AS height,
-           CAST(w * 8 AS BIGINT) AS n_pixels,
-           CAST(list_sum(bs) AS BIGINT) AS px_sum,
-           CAST(list_max(bs) AS INT) AS px_max
-    FROM px
-    """,
-    tags=("multimodal", "codec", "ico"),
+    per-plane RLE and the pad-byte handling.""",
 )
-def media_ico_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image-codec round trip through the Windows ICO container
+
+
+_pixel_stats_query(
+    "media_ico_pixel_stats",
+    "ico",
+    lambda c, img: c.decode_ico(c.encode_ico(img))[:, :, :3],
+    tags=("multimodal", "codec", "ico"),
+    doc="""REAL image-codec round trip through the Windows ICO container
     (operators/ico.py): each document's leading bytes become an
     (8, w, 3) image, encode to a genuine single-entry classic-DIB ICO
     (32-bit BGRA XOR bitmap, doubled-height header, 32-bit-padded
@@ -2152,46 +1886,8 @@ def media_ico_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     transparency rule and delegates PNG entries to the certified PNG
     tier), and report pixel stats from the DECODED array — the oracle
     recomputes them from the source characters, certifying
-    losslessness through the container round trip."""
-    t = load(spark, sf_dir)
-    docs = t.documents.select("doc_id", "text")
-
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        from ..operators.ico import decode_ico, encode_ico
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                w, img = _doc_image(text)
-                dec = decode_ico(encode_ico(img))[:, :, :3]
-                rows.append(
-                    {
-                        "media_id": int(doc_id),
-                        "width": w,
-                        "height": 8,
-                        "n_pixels": int(dec.shape[0] * dec.shape[1]),
-                        "px_sum": int(dec.astype(np.int64).sum()),
-                        "px_max": int(dec.max()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_pixels",
-                    "px_sum", "px_max",
-                ],
-            )
-
-    return docs.repartition(8).mapInPandas(
-        kernel,
-        schema=(
-            "media_id long, width int, height int, n_pixels long,"
-            " px_sum long, px_max int"
-        ),
-    )
+    losslessness through the container round trip.""",
+)
 
 
 @query(

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.rank import ordered_scan
+from .daily import daily_revenue, daily_revenue_sql
 from .registry import query
 
 #: o_orderdate sanity bounds (TPC-H generation window)
@@ -1240,12 +1241,8 @@ def theil_index_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @query(
     "seasonal_decompose_weekday",
-    oracle="""
-    WITH daily AS (
-        SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS d,
-               sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS rev
-        FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({daily_revenue_sql("rev")}),
     tr AS (
         SELECT d, rev,
                CASE WHEN count(*) OVER w = 7
@@ -1284,16 +1281,7 @@ def seasonal_decompose_weekday(spark: SparkSession, sf_dir: str) -> DataFrame:
     day; the centered window runs over the calendar-bounded daily
     frame (bounded-window tier); two scalar aggregates finish."""
     t = load(spark, sf_dir)
-    daily = (
-        t.orders.select(
-            F.to_date(F.date_trunc("day", "o_orderdate")).alias("d"),
-            F.round(F.col("o_totalprice") * 100, 0)
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("rev"))
-    )
+    daily = daily_revenue(t.orders, "rev")
     w = W.orderBy("d").rowsBetween(-3, 3)
     tr = daily.select(
         "d",
@@ -1327,11 +1315,7 @@ ACF_MAX_LAG = 7
 @query(
     "acf_ljung_box",
     oracle=f"""
-    WITH daily AS (
-        SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS d,
-               sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS rev
-        FROM orders GROUP BY 1
-    ),
+    WITH daily AS ({daily_revenue_sql("rev")}),
     m AS (SELECT avg(rev) AS mu, count(*) AS n FROM daily),
     dev AS (
         SELECT row_number() OVER (ORDER BY d) AS t, rev - mu AS e, n
@@ -1372,16 +1356,7 @@ def acf_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     deviations are integer-cents minus a rational mean — identical
     expressions both engines, rounded outputs."""
     t = load(spark, sf_dir)
-    daily = (
-        t.orders.select(
-            F.to_date(F.date_trunc("day", "o_orderdate")).alias("d"),
-            F.round(F.col("o_totalprice") * 100, 0)
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("rev"))
-    )
+    daily = daily_revenue(t.orders, "rev")
     m = daily.agg(F.avg("rev").alias("mu"), F.count("*").alias("n"))
     dev = daily.crossJoin(F.broadcast(m)).select(
         "d", (F.col("rev") - F.col("mu")).alias("e"), "n"
@@ -2131,12 +2106,8 @@ def dp_noisy_clamped_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so both sides hand the SAME integers to the SAME double
     # expression tree and the t-statistic matches bit-for-bit before
     # rounding.
-    oracle="""
-    WITH daily AS (
-        SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS d,
-               sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS rev
-        FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({daily_revenue_sql("rev")}),
     l1 AS (
         SELECT d, rev, lag(rev) OVER (ORDER BY d) AS y1 FROM daily
     ),
@@ -2211,16 +2182,7 @@ def adf_unit_root_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline).  A hypothesis test pins the statistic itself against
     a numpy lstsq reference (tests/test_properties.py)."""
     t = load(spark, sf_dir)
-    daily = (
-        t.orders.select(
-            F.to_date(F.date_trunc("day", "o_orderdate")).alias("d"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("long").alias(
-                "cents"
-            ),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("rev"))
-    )
+    daily = daily_revenue(t.orders, "rev")
     w = W.orderBy("d")
     l1 = daily.select("d", "rev", F.lag("rev").over(w).alias("y1"))
     l2 = l1.where(F.col("y1").isNotNull()).select(
@@ -2458,12 +2420,8 @@ def engle_granger_cointegration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is deterministic — no interpolating percentile whose midpoint
     # arithmetic could differ.  The pair count is calendar-bounded
     # (~2.4k days -> ~2.9M pairs REGARDLESS of fact-table scale).
-    oracle="""
-    WITH daily AS (
-        SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS d,
-               sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS rev
-        FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({daily_revenue_sql("rev")}),
     days AS (
         SELECT CAST(d - DATE '1992-01-01' AS BIGINT) AS t, rev FROM daily
     ),
@@ -2501,19 +2459,9 @@ def theil_sen_trend_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame
     lower-median rule under the total order (slope, d1, d2) makes the
     selection reproducible across engines and partitionings."""
     t = load(spark, sf_dir)
-    daily = (
-        t.orders.select(
-            F.to_date(F.date_trunc("day", "o_orderdate")).alias("d"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("long").alias(
-                "cents"
-            ),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("rev"))
-        .select(
-            F.datediff("d", F.lit("1992-01-01")).cast("long").alias("t"),
-            "rev",
-        )
+    daily = daily_revenue(t.orders, "rev").select(
+        F.datediff("d", F.lit("1992-01-01")).cast("long").alias("t"),
+        "rev",
     )
     a = daily.select(F.col("t").alias("d1"), F.col("rev").alias("r1"))
     b = daily.select(F.col("t").alias("d2"), F.col("rev").alias("r2"))
@@ -2574,12 +2522,8 @@ def theil_sen_trend_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame
     # S and the tie-corrected variance are exact integers (DECIMAL(38,0)
     # where products can exceed int64); the z-statistic is one double
     # expression evaluated identically on both engines.
-    oracle="""
-    WITH daily AS (
-        SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS d,
-               sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS rev
-        FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({daily_revenue_sql("rev")}),
     s AS (
         SELECT CAST(sum(CASE WHEN b.rev > a.rev THEN 1
                              WHEN b.rev < a.rev THEN -1 ELSE 0 END)
@@ -2619,17 +2563,8 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulates as an exact integer, and the one float expression is
     a single-row closed form."""
     t = load(spark, sf_dir)
-    daily = (
-        t.orders.select(
-            F.to_date(F.date_trunc("day", "o_orderdate")).alias("d"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("long").alias(
-                "cents"
-            ),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("rev"))
-        .persist()  # feeds the pair join twice plus n and ties
-    )
+    # feeds the pair join twice plus n and ties
+    daily = daily_revenue(t.orders, "rev").persist()
     dec = "decimal(38,0)"
     a = daily.select(F.col("d").alias("d1"), F.col("rev").alias("r1"))
     b = daily.select(F.col("d").alias("d2"), F.col("rev").alias("r2"))
@@ -2690,11 +2625,7 @@ _BT_HORIZONS = 7
     # float expression over exact DECIMAL(38,0) error moments, so both
     # engines aggregate identical integers and round once.
     oracle=f"""
-    WITH daily AS (
-        SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS d,
-               sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS rev
-        FROM orders GROUP BY 1
-    ),
+    WITH daily AS ({daily_revenue_sql("rev")}),
     h AS (SELECT unnest(range(1, {_BT_HORIZONS + 1})) AS horizon),
     j AS (
         SELECT h.horizon, a.rev AS actual, b.rev AS pred
@@ -2739,17 +2670,8 @@ def naive_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     with sMAPE the only float sum (order-insensitive to 6 digits —
     the same rounding discipline as the LM-score rollups)."""
     t = load(spark, sf_dir)
-    daily = (
-        t.orders.select(
-            F.to_date(F.date_trunc("day", "o_orderdate")).alias("d"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("long").alias(
-                "cents"
-            ),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("rev"))
-        .persist()  # both sides of the horizon join
-    )
+    # both sides of the horizon join
+    daily = daily_revenue(t.orders, "rev").persist()
     h = spark.range(1, _BT_HORIZONS + 1).select(
         F.col("id").cast("int").alias("horizon")
     )
@@ -3274,11 +3196,7 @@ _HOLT_ROUND = 6  #: per-step state rounding (HALF_UP, both engines)
     # boundaries); errors quantize to integer cents so the backtest
     # moments accumulate as exact DECIMAL integers.
     oracle=f"""
-    WITH RECURSIVE daily AS (
-        SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS d,
-               sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS rev
-        FROM orders GROUP BY 1
-    ),
+    WITH RECURSIVE daily AS ({daily_revenue_sql("rev")}),
     idx AS (
         SELECT row_number() OVER (ORDER BY d) AS t, rev FROM daily
     ),
@@ -3344,16 +3262,7 @@ def holt_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     t = load(spark, sf_dir)
-    daily = (
-        t.orders.select(
-            F.to_date(F.date_trunc("day", "o_orderdate")).alias("d"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("long").alias(
-                "cents"
-            ),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("rev"))
-    )
+    daily = daily_revenue(t.orders, "rev")
     alpha, beta, rnd = _HOLT_ALPHA, _HOLT_BETA, _HOLT_ROUND
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -3716,12 +3625,8 @@ def bh_fdr_supplier_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # only the final two residual sums are float accumulations, and
     # the 6-digit rounding absorbs their association-order noise (the
     # adf_unit_root_daily_revenue float-parity discipline).
-    oracle="""
-    WITH daily AS (
-        SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS d,
-               sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS y
-        FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({daily_revenue_sql("y")}),
     idx AS (
         SELECT d, y, CAST(d - DATE '1992-01-01' AS BIGINT) AS t FROM daily
     ),
@@ -3778,16 +3683,7 @@ def durbin_watson_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines; the single lag window runs over the bounded ~2.4k-row
     daily frame (documented bounded-global-window tier)."""
     t = load(spark, sf_dir)
-    daily = (
-        t.orders.select(
-            F.to_date(F.date_trunc("day", "o_orderdate")).alias("d"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("long").alias(
-                "cents"
-            ),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("y"))
-    )
+    daily = daily_revenue(t.orders, "y")
     idx = daily.select(
         "d", "y",
         F.datediff("d", F.lit("1992-01-01")).cast("long").alias("t"),
@@ -3850,11 +3746,7 @@ _VR_Q = 5
     # accumulations and the 5-digit rounding absorbs their
     # association-order noise.
     oracle=f"""
-    WITH daily AS (
-        SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS d,
-               sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS y
-        FROM orders GROUP BY 1
-    ),
+    WITH daily AS ({daily_revenue_sql("y")}),
     lr AS (
         SELECT d, ln(CAST(y AS DOUBLE)) AS ly,
                lag(ln(CAST(y AS DOUBLE)), 1) OVER (ORDER BY d) AS ly1,
@@ -3908,16 +3800,7 @@ def variance_ratio_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     float accumulations are the two squared-deviation sums, absorbed
     by the 5-digit rounding."""
     t = load(spark, sf_dir)
-    daily = (
-        t.orders.select(
-            F.to_date(F.date_trunc("day", "o_orderdate")).alias("d"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("long").alias(
-                "cents"
-            ),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("y"))
-    )
+    daily = daily_revenue(t.orders, "y")
     w = W.orderBy("d")
     lr = daily.select(
         "d",
@@ -4456,12 +4339,8 @@ def grubbs_outlier_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sums are the only float accumulations (absorbed by rounding),
     # and the Durbin-Levinson recursion is closed-form scalar algebra
     # over the three autocorrelations.
-    oracle="""
-    WITH daily AS (
-        SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS d,
-               sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS rev
-        FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({daily_revenue_sql("rev")}),
     m AS (SELECT avg(rev) AS mu FROM daily),
     dev AS (
         SELECT d, rev - mu AS e,
@@ -4507,16 +4386,7 @@ def pacf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the three autocorrelations, then closed-form scalar algebra —
     the acf_ljung_box float discipline throughout."""
     t = load(spark, sf_dir)
-    daily = (
-        t.orders.select(
-            F.to_date(F.date_trunc("day", "o_orderdate")).alias("d"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("long").alias(
-                "cents"
-            ),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("rev"))
-    )
+    daily = daily_revenue(t.orders, "rev")
     m = daily.agg(F.avg("rev").alias("mu"))
     w = W.orderBy("d")
     e = F.col("rev") - F.col("mu")
@@ -4571,12 +4441,8 @@ def pacf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DECIMAL trend moments -> same (a, b) on both engines); the
     # auxiliary regression of e^2 on t uses the same closed form with
     # float moment sums absorbed by the rounding.
-    oracle="""
-    WITH daily AS (
-        SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS d,
-               sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS y
-        FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({daily_revenue_sql("y")}),
     idx AS (
         SELECT d, y, CAST(d - DATE '1992-01-01' AS BIGINT) AS t FROM daily
     ),
@@ -4637,16 +4503,7 @@ def breusch_pagan_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical doubles with the R² in closed form — no second pass, no
     window at all."""
     t = load(spark, sf_dir)
-    daily = (
-        t.orders.select(
-            F.to_date(F.date_trunc("day", "o_orderdate")).alias("d"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("long").alias(
-                "cents"
-            ),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("y"))
-    )
+    daily = daily_revenue(t.orders, "y")
     idx = daily.select(
         "y", F.datediff("d", F.lit("1992-01-01")).cast("long").alias("t")
     )
@@ -4714,11 +4571,7 @@ _HURST_SCALES = (16, 32, 64, 128)
     # the per-scale averages are exact integer ratios; only the final
     # 4-point log-log regression sums floats (absorbed by rounding).
     oracle=f"""
-    WITH daily AS (
-        SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS d,
-               sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS y
-        FROM orders GROUP BY 1
-    ),
+    WITH daily AS ({daily_revenue_sql("y")}),
     idx AS (
         SELECT y, row_number() OVER (ORDER BY d) - 1 AS i FROM daily
     ),
@@ -4784,16 +4637,7 @@ def hurst_rs_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact; the only cross-engine float accumulation is the final
     4-point regression (rounded)."""
     t = load(spark, sf_dir)
-    daily = (
-        t.orders.select(
-            F.to_date(F.date_trunc("day", "o_orderdate")).alias("d"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("long").alias(
-                "cents"
-            ),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("y"))
-    )
+    daily = daily_revenue(t.orders, "y")
     idx = daily.select(
         "y", (F.row_number().over(W.orderBy("d")) - 1).alias("i")
     )
@@ -4869,12 +4713,8 @@ def hurst_rs_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # arithmetic over them, and the argmax day is chosen under a total
     # (|U| DESC, day ASC) order — deterministic end to end; only the
     # closed-form p-value is a float expression (identical inputs).
-    oracle="""
-    WITH daily AS (
-        SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS d,
-               sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS y
-        FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({daily_revenue_sql("y")}),
     rk AS (
         SELECT d,
                rank() OVER (ORDER BY y)
@@ -4922,16 +4762,7 @@ def pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded daily frame (exact half-integers); the running statistic
     is exact arithmetic whose max is picked under a total order."""
     t = load(spark, sf_dir)
-    daily = (
-        t.orders.select(
-            F.to_date(F.date_trunc("day", "o_orderdate")).alias("d"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("long").alias(
-                "cents"
-            ),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("y"))
-    )
+    daily = daily_revenue(t.orders, "y")
     rk = daily.select(
         "d",
         (
@@ -4986,12 +4817,8 @@ def pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exact rational mean (identical booleans both engines), the
     # run count and group sizes are exact integers, and the z-score is
     # one closed-form double expression.
-    oracle="""
-    WITH daily AS (
-        SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS d,
-               sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS y
-        FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({daily_revenue_sql("y")}),
     m AS (
         SELECT CAST(sum(CAST(y AS DECIMAL(38,0))) AS DOUBLE)
                / count(*) AS mu
@@ -5037,16 +4864,7 @@ def runs_test_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a single closed-form double expression."""
     t = load(spark, sf_dir)
     dec = "decimal(38,0)"
-    daily = (
-        t.orders.select(
-            F.to_date(F.date_trunc("day", "o_orderdate")).alias("d"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("long").alias(
-                "cents"
-            ),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("y"))
-    )
+    daily = daily_revenue(t.orders, "y")
     m = daily.agg(
         (
             F.expr("sum(CAST(y AS DECIMAL(38,0)))").cast("double") / F.count("*")
@@ -5618,12 +5436,8 @@ def multi_table_key_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # absolute/pinball errors are exact integer cents (lag values are
     # integers), so every numerator/denominator is an exact integer
     # sum and the three ratios are single divisions.
-    oracle="""
-    WITH daily AS (
-        SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS d,
-               sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS y
-        FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({daily_revenue_sql("y")}),
     l AS (
         SELECT d, y,
                lag(y, 1) OVER (ORDER BY d) AS f1,
@@ -5667,16 +5481,7 @@ def mase_pinball_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer (pinball weights scaled x10 to stay integral), so each
     output is one exact-integer ratio."""
     t = load(spark, sf_dir)
-    daily = (
-        t.orders.select(
-            F.to_date(F.date_trunc("day", "o_orderdate")).alias("d"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("long").alias(
-                "cents"
-            ),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("y"))
-    )
+    daily = daily_revenue(t.orders, "y")
     w = W.orderBy("d")
     l_ = daily.select(
         "y",
@@ -5735,12 +5540,8 @@ def mase_pinball_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sum-of-integers / 7 rationals); the per-weekday seasonal means
     # and the three variances are the only float accumulations, all
     # feeding ratios rounded at 6 (the cuped float posture).
-    oracle="""
-    WITH daily AS (
-        SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS d,
-               sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS rev
-        FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({daily_revenue_sql("rev")}),
     tr AS (
         SELECT d, rev,
                CASE WHEN count(*) OVER w = 7
@@ -5789,16 +5590,7 @@ def decomposition_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     seasonal means joined back broadcast, one variance aggregate —
     float sums only inside rounded ratios."""
     t = load(spark, sf_dir)
-    daily = (
-        t.orders.select(
-            F.to_date(F.date_trunc("day", "o_orderdate")).alias("d"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("long").alias(
-                "cents"
-            ),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("rev"))
-    )
+    daily = daily_revenue(t.orders, "rev")
     w = W.orderBy("d").rowsBetween(-3, 3)
     tr = daily.select(
         "d", "rev",
@@ -6050,12 +5842,8 @@ def jarque_bera_order_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical double expressions. The break point is the calendar
     # midpoint (floor(n/2)) — a literal once n is known, so both
     # engines split identically.
-    oracle="""
-    WITH daily AS (
-        SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS d,
-               sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS y
-        FROM orders GROUP BY 1
-    ),
+    oracle=f"""
+    WITH daily AS ({daily_revenue_sql("y")}),
     idx AS (
         SELECT y, row_number() OVER (ORDER BY d) - 1 AS i FROM daily
     ),
@@ -6124,16 +5912,7 @@ def chow_break_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded-window tag); per-regime OLS moments are exact DECIMAL
     sums; SSRs and F are scalar double arithmetic on a 2-row frame."""
     t = load(spark, sf_dir)
-    daily = (
-        t.orders.select(
-            F.to_date(F.date_trunc("day", "o_orderdate")).alias("d"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("long").alias(
-                "cents"
-            ),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("y"))
-    )
+    daily = daily_revenue(t.orders, "y")
     idx = daily.select(
         "y", (F.row_number().over(W.orderBy("d")) - 1).alias("i")
     )
@@ -6219,11 +5998,7 @@ def _hw_oracle() -> str:
         for i in range(m)
     )
     return f"""
-    WITH RECURSIVE daily AS (
-        SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS d,
-               sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS rev
-        FROM orders GROUP BY 1
-    ),
+    WITH RECURSIVE daily AS ({daily_revenue_sql("rev")}),
     idx AS (
         SELECT row_number() OVER (ORDER BY d) AS t, rev FROM daily
     ),
@@ -6294,16 +6069,7 @@ def holt_winters_weekly_backtest(
     import pandas as pd
 
     t = load(spark, sf_dir)
-    daily = (
-        t.orders.select(
-            F.to_date(F.date_trunc("day", "o_orderdate")).alias("d"),
-            F.round(F.col("o_totalprice") * 100, 0).cast("long").alias(
-                "cents"
-            ),
-        )
-        .groupBy("d")
-        .agg(F.sum("cents").alias("rev"))
-    )
+    daily = daily_revenue(t.orders, "rev")
     a, b_, g, rnd, m = _HW_ALPHA, _HW_BETA, _HW_GAMMA, _HW_ROUND, _HW_M
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:

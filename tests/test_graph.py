@@ -1,4 +1,5 @@
-"""k-core decomposition operator vs a pure-Python peeling reference."""
+"""k-core decomposition vs a pure-Python peeling reference, plus the
+loop bounds of the graph fixpoint operators."""
 
 
 
@@ -62,8 +63,8 @@ def test_kcore_duplicate_edges_do_not_inflate_degrees(spark):
     assert kcore(e, 2, dedup=False).count() > 0
 
 
-def test_kcore_warns_when_max_iters_exhausted(spark):
-    import warnings
+def test_kcore_raises_when_max_iters_exhausted(spark):
+    import pytest
 
     from finanalyzer_spark.operators.graph import kcore
 
@@ -72,10 +73,28 @@ def test_kcore_warns_when_max_iters_exhausted(spark):
     und = [(i, i + 1) for i in range(8)]
     sym = und + [(b, a) for a, b in und]
     e = spark.createDataFrame(sym, ["src", "dst"])
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        kcore(e, 2, max_iters=1).collect()
-    assert any(issubclass(x.category, RuntimeWarning) for x in w)
+    with pytest.raises(RuntimeError, match="max_iters=1"):
+        kcore(e, 2, max_iters=1)
+
+
+def test_components_raise_when_max_iter_exhausted(spark):
+    """A path graph needs several min-label rounds even with pointer
+    jumping: one round must raise, the default bound must converge to
+    the single component labelled by the minimum node."""
+    import pytest
+
+    from finanalyzer_spark.operators.components import connected_components
+
+    e = spark.createDataFrame(
+        [(i, i + 1) for i in range(32)], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(e, max_iter=1)
+    got = {
+        r["node"]: r["component"]
+        for r in connected_components(e).collect()
+    }
+    assert got == {i: 0 for i in range(33)}
 
 
 def test_broadcast_nodes_auto_gate(spark):

@@ -1618,3 +1618,44 @@ def test_id3v2_roundtrip_and_dirty_tags():
 
     # no tag at all -> {}
     assert parse_id3v2(b"\xff\xfb\x90\x00" + bytes(32)) == {}
+
+
+_LOSSLESS_IMAGE_CODECS = ("qoi", "tiff", "png", "tga", "pcx", "ico")
+
+
+def test_lossless_image_round_trips_share_one_oracle():
+    """Each lossless image round trip is one `_pixel_stats_query` call:
+    the shared oracle, its own name, doc and codec tag."""
+    from finanalyzer_spark.plans import REGISTRY
+    from finanalyzer_spark.plans.multimodal import _PIXEL_STATS_ORACLE
+
+    docs = set()
+    for codec in _LOSSLESS_IMAGE_CODECS:
+        name = f"media_{codec}_pixel_stats"
+        spec = REGISTRY[name]
+        assert spec.oracle == _PIXEL_STATS_ORACLE
+        assert spec.fn.__name__ == name
+        assert spec.doc
+        assert codec in spec.tags
+        docs.add(spec.doc)
+    assert len(docs) == len(_LOSSLESS_IMAGE_CODECS)
+
+
+def test_registry_import_leaves_image_codecs_unloaded():
+    """Codec modules load inside the Python worker, not when the
+    registry is imported (a fresh interpreter, since other tests
+    import the codecs directly)."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    mods = [f"finanalyzer_spark.operators.{c}" for c in _LOSSLESS_IMAGE_CODECS]
+    code = (
+        "import sys, finanalyzer_spark.plans; "
+        f"print([m for m in {mods!r} if m in sys.modules])"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        check=True, cwd=Path(__file__).resolve().parents[1],
+    )
+    assert out.stdout.strip() == "[]"
