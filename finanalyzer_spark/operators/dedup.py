@@ -77,16 +77,16 @@ def exact_dedup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 
 def dedup_by_key(
-    df: DataFrame, keys: Sequence[str], order: Sequence[Column]
+    df: DataFrame, keys: Sequence[str], order: Sequence[Column], rn: str = "_rn"
 ) -> DataFrame:
     """Deterministic-survivor key dedup: redundancy.sql semantics with
     an explicit ORDER BY (reference survivor is arbitrary; ours is
-    reproducible)."""
+    reproducible). `rn` names the temporary row-number column."""
     w = W.partitionBy(*keys).orderBy(*order)
     return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
+        df.withColumn(rn, F.row_number().over(w))
+        .where(F.col(rn) == 1)
+        .drop(rn)
     )
 
 

@@ -36,7 +36,7 @@ from ..operators.dedup import dedup_by_key
 from ..operators.ids import positional_ids
 from ..sources.csvseed import read_tickers_csv
 from ..sources.fetcher import FakeFeed, fetch_history, fetch_info
-from .merge import merge_into, overwrite_atomic
+from .merge import merge_into, overwrite_atomic, recover_swap
 
 MAX_DATA_HISTORY_YEARS = 10  # reference constants.py:1
 RETENTION_DAYS = 3650  # findatabase.py:50: 365 * years
@@ -55,7 +55,14 @@ class FinStore:
     the daily cycle launches a schema-inference job: on a cluster each
     such job is a remote task launch plus an object-store footer GET.
     Delta would serve the schema from its transaction log the same
-    way."""
+    way.
+
+    `exists`, `read` and `merge` first finish a swap that crashed
+    between its two renames (merge.recover_swap), so a plain-store
+    read may rename a directory. That is safe only because the plain
+    store has one writer and runs its calls in sequence: no read or
+    probe of a table overlaps a swap of it. Concurrent readers need
+    VersionedFinStore (or a table format)."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -67,11 +74,13 @@ class FinStore:
     def exists(self, table: str) -> bool:
         import glob
 
+        recover_swap(self.path(table))
         return bool(glob.glob(os.path.join(self.path(table), "*.parquet"))) or bool(
             glob.glob(os.path.join(self.path(table), "*/*.parquet"))
         )
 
     def read(self, table: str) -> DataFrame:
+        recover_swap(self.path(table))
         return read_parquet(self.spark, self.path(table))
 
     def write(self, df: DataFrame, table: str, mode: str = "overwrite") -> None:
@@ -349,14 +358,17 @@ def fill_all_history(
     store: FinStore, today: dt.date, feed: FakeFeed | None = None
 ) -> DataFrame:
     """fill_all_data (findatabase.py:181-201): truncate + full 10-year
-    fetch for every registered ticker."""
+    fetch for every registered ticker. The task frame is spread over
+    the cluster's cores by ticker: `names` is one small file, so
+    without the repartition one Python task would fetch every ticker's
+    ten years serially."""
     names = store.read("names")
     start = today - dt.timedelta(days=RETENTION_DAYS)
     tasks = names.select(
         "ticker",
         F.lit(start.isoformat()).alias("start_date"),
         F.lit(today.isoformat()).alias("end_date"),
-    )
+    ).repartition(store.spark.sparkContext.defaultParallelism, "ticker")
     fetched = fetch_history(tasks, feed)
     incoming = (
         fetched.join(F.broadcast(names.select("id", "ticker")), "ticker")

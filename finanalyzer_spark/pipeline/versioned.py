@@ -39,6 +39,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import forget_schema, read_parquet, remember_schema
+from .merge import upsert_frame
 
 
 class VersionedTable:
@@ -144,12 +145,15 @@ class VersionedTable:
         retain=None,
         txn_id: int | None = None,
     ) -> int:
-        """Keyed upsert as a snapshot commit: same semantics as
-        pipeline.merge.merge_into (matched keys replaced, deterministic
-        within-batch survivor under `order_by`, `retain` predicate
-        fused into the write) but readers of the previous version are
-        never disturbed and the pre-merge state stays time-travelable
-        until vacuum. Returns the committed version.
+        """Keyed upsert as a snapshot commit: the committed snapshot is
+        pipeline.merge.upsert_frame of the current one and `source`, the
+        same one-pass plan as merge_into (matched keys replaced, NULL
+        keys equal, deterministic within-batch survivor under
+        `order_by`, `retain` predicate fused into the write, the source
+        evaluated exactly once and not persisted; pipeline/merge.py
+        says why), but readers of the previous version
+        are never disturbed and the pre-merge state stays
+        time-travelable until vacuum. Returns the committed version.
 
         `txn_id` makes the commit TRANSACTIONALLY idempotent (Delta's
         txn appId/version pattern): a merge whose id is <= the last
@@ -160,22 +164,8 @@ class VersionedTable:
         snapshot churn, and non-keyed appends can't dedup at all)."""
         if txn_id is not None and txn_id <= self.last_txn():
             return self.current_version()
-        if order_by:
-            from ..operators.dedup import dedup_by_key
-
-            incoming = dedup_by_key(source, keys, order_by)
-        else:
-            incoming = source.dropDuplicates(keys)
-        if self.current_version() > 0:
-            current = self.read()
-            merged = current.join(incoming, keys, "left_anti").unionByName(
-                incoming
-            )
-        else:
-            merged = incoming
-        if retain is not None:
-            merged = merged.where(retain)
-        version = self.commit(merged)
+        current = self.read() if self.current_version() > 0 else None
+        version = self.commit(upsert_frame(current, source, keys, order_by, retain))
         if txn_id is not None:
             # recorded AFTER the snapshot commit: a crash in between
             # redelivers the batch, and the keyed merge makes the

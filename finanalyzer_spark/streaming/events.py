@@ -228,7 +228,8 @@ def streaming_enrich_with_dim(
 
 def foreach_batch_merge(target_dir: str, keys: list[str]):
     """ForeachBatch sink: idempotent keyed upsert of each micro-batch
-    into a parquet target (read → left-anti on keys → union → swap).
+    into a parquet target (one-pass `merge_into`: target ∪ batch,
+    first row per key, swap), which reads the micro-batch once.
 
     This is the reference's post-load redundancy delete
     (redundancy.sql) turned into an online MERGE: re-delivered rows

@@ -193,6 +193,30 @@ def test_fill_all_history_overwrites(store, tickers_csv):
     assert first.equals(second)
 
 
+def test_fill_all_history_equals_serial_fetch(store, tickers_csv):
+    """The fill's fetch runs one task per core; its rows are exactly
+    what fetching every ticker serially from the feed gives."""
+    import pandas as pd
+
+    names = bootstrap_registry(store, tickers_csv).toPandas()
+    feed = FakeFeed()
+    got = fill_all_history(store, TODAY, feed).toPandas()
+    start = TODAY - dt.timedelta(days=RETENTION_DAYS)
+    parts = []
+    for ticker, names_id in zip(names["ticker"], names["id"]):
+        pdf = feed.history(ticker, start, TODAY)
+        pdf.insert(0, "names_id", names_id)
+        parts.append(pdf)
+    want = pd.concat(parts)
+    cols = ["names_id", "date_value", "open", "high", "low", "close"]
+    got["date_value"] = got["date_value"].map(lambda d: d.isoformat())
+    assert (got["date_added"] == TODAY).all()
+    keys = ["names_id", "date_value"]
+    got = got[cols].sort_values(keys).reset_index(drop=True)
+    want = want[cols].sort_values(keys).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+
 def test_update_fundamentals_stale_today_only(store, tickers_csv):
     """Info refreshes unless its snapshot is EXACTLY today
     (findatabase.py:225-227 — no yesterday tolerance, unlike history)."""

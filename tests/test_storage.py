@@ -186,6 +186,81 @@ def test_merge_into_ordered_survivor_and_retain(spark, tmp_path):
     assert got == {(1, "new"), (3, "y")}
 
 
+def test_merge_into_null_key_replay_is_noop(spark, tmp_path):
+    """NULL keys compare equal across target and source, as they do
+    within a batch: replaying a batch with a NULL-key row three times
+    leaves exactly one such row."""
+    from finanalyzer_spark.pipeline.merge import merge_into
+
+    target = str(tmp_path / "tbl")
+    merge_into(spark, target, spark.createDataFrame([(1, "a")], "k long, v string"), ["k"])
+    batch = spark.createDataFrame([(None, "n"), (2, "b")], "k long, v string")
+    for _ in range(3):
+        out = merge_into(spark, target, batch, ["k"])
+    got = sorted((r["k"] or 0, r["v"]) for r in out.collect())
+    assert got == [(0, "n"), (1, "a"), (2, "b")]
+
+
+def test_merge_into_evaluates_source_once(spark, tmp_path):
+    """One merge into a non-empty target runs the source's kernel once:
+    the target and the source meet in one pass, so a feed-backed source
+    sends each request once."""
+    from finanalyzer_spark.pipeline.merge import merge_into
+
+    from .conftest import logged_source, read_log
+
+    target = str(tmp_path / "tbl")
+    merge_into(spark, target, spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"), ["k"])
+    log = str(tmp_path / "calls.log")
+    src = logged_source(spark, log, [(2, "B"), (3, "c")], "k long, v string")
+    out = merge_into(spark, target, src, ["k"], order_by=[F.col("v")])
+    assert len(read_log(log)) == 1
+    assert sorted((r["k"], r["v"]) for r in out.collect()) == [(1, "a"), (2, "B"), (3, "c")]
+
+
+def test_merge_into_nondeterministic_source_keeps_keys_unique(spark, tmp_path):
+    """A source that returns a different subset of keys on every call
+    (a live feed, a recomputed micro-batch) still merges consistently:
+    keys stay unique, the keys it returned are replaced, and every
+    target row it did not return survives."""
+    from finanalyzer_spark.pipeline.merge import merge_into
+
+    from .conftest import logged_source, read_log
+
+    target = str(tmp_path / "tbl")
+    keys = range(20)
+    merge_into(spark, target, spark.createDataFrame([(k, "old") for k in keys], "k long, v string"), ["k"])
+    log = str(tmp_path / "calls.log")
+    src = logged_source(spark, log, [(k, "new") for k in keys], "k long, v string", random_subset=True)
+    rows = [(r["k"], r["v"]) for r in merge_into(spark, target, src, ["k"]).collect()]
+    assert len(rows) == len({k for k, _ in rows}), "duplicate keys"
+    (returned,) = read_log(log)
+    assert sorted(rows) == [(k, "new" if k in returned else "old") for k in keys]
+
+
+def test_merge_into_helper_column_clash_raises_without_jobs(spark, tmp_path):
+    """A user column named like a merge helper column is refused from
+    the schemas alone: ValueError, no Spark job, the target untouched."""
+    import uuid
+
+    from finanalyzer_spark.pipeline.merge import merge_into
+
+    target = str(tmp_path / "tbl")
+    merge_into(spark, target, spark.createDataFrame([(1, 1)], "k long, v long"), ["k"])
+    bad = spark.createDataFrame([(1, 2)], "k long, _merge_rn long")
+    sc = spark.sparkContext
+    group = f"clash-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="_merge_rn"):
+            merge_into(spark, target, bad, ["k"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert [tuple(r) for r in spark.read.parquet(target).collect()] == [(1, 1)]
+
+
 def test_overwrite_atomic_crash_between_renames_keeps_both_versions(
     spark, tmp_path, monkeypatch
 ):
@@ -229,6 +304,50 @@ def test_overwrite_atomic_crash_between_renames_keeps_both_versions(
     # recovery = one rename of either version; promote the staged one
     _os.rename(str(tmp_path / tmps[0]), path)
     assert spark.read.parquet(path).collect()[0]["v"] == "v2"
+
+    # The store promotes the parked version back by itself: after a
+    # daily cycle's history swap crashes between the renames, the next
+    # cycle sees the last committed history and fetches only the days
+    # after it, not ten years.
+    import datetime as dt
+
+    from finanalyzer_spark.pipeline.finjobs import (
+        FinStore,
+        bootstrap_registry,
+        fill_all_history,
+        update_history,
+    )
+    from finanalyzer_spark.sources.fetcher import FakeFeed
+
+    csv = tmp_path / "tickers.csv"
+    csv.write_text("Ticker,Name,Exchange\nAAPL,Apple,NASDAQ\nMSFT,Microsoft,NASDAQ\n")
+    store = FinStore(spark, str(tmp_path / "w"))
+    bootstrap_registry(store, str(csv))
+    day0 = dt.date(2026, 8, 10)
+    n0 = fill_all_history(store, day0, FakeFeed()).count()
+    calls.clear()
+    monkeypatch.setattr(merge_mod.os, "rename", crashing_rename)
+    with _pytest.raises(OSError, match="injected crash"):
+        update_history(store, day0 + dt.timedelta(days=2), FakeFeed())
+    monkeypatch.undo()
+    assert not _os.path.exists(store.path("history"))
+
+    log = str(tmp_path / "fetch.log")
+
+    class LoggingFeed(FakeFeed):
+        def history(self, ticker, start, end):
+            with open(log, "a") as fh:
+                fh.write(f"{ticker} {start} {end}\n")
+            return super().history(ticker, start, end)
+
+    today = day0 + dt.timedelta(days=4)
+    h = update_history(store, today, LoggingFeed())
+    with open(log) as fh:
+        fetched = sorted(line.split() for line in fh)
+    first_new = (day0 + dt.timedelta(days=1)).isoformat()
+    assert fetched == [[t, first_new, today.isoformat()] for t in ("AAPL", "MSFT")]
+    assert h.count() == n0 + 2 * 4
+    assert not [e for e in _os.listdir(store.root) if e.startswith("history.old-")]
 
 
 def test_overwrite_atomic_crash_during_staging_leaves_target_untouched(

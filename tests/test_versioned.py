@@ -89,6 +89,52 @@ def test_merge_commits_upsert_with_history(spark, tmp_path):
     assert {(r["k"], r["v"]) for r in t.read().collect()} == got
 
 
+def test_merge_null_key_replay_is_noop(spark, tmp_path):
+    """NULL keys compare equal across snapshot and source: replaying a
+    batch with a NULL-key row three times leaves exactly one."""
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    t.merge(spark.createDataFrame([(1, "a")], "k long, v string"), ["k"])
+    batch = spark.createDataFrame([(None, "n"), (2, "b")], "k long, v string")
+    for _ in range(3):
+        t.merge(batch, ["k"])
+    got = sorted((r["k"] or 0, r["v"]) for r in t.read().collect())
+    assert got == [(0, "n"), (1, "a"), (2, "b")]
+
+
+def test_merge_evaluates_source_once(spark, tmp_path):
+    """A versioned merge into a non-empty table runs the source's kernel
+    once, as merge_into does."""
+    from pyspark.sql import functions as F
+
+    from .conftest import logged_source, read_log
+
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    t.merge(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"), ["k"])
+    log = str(tmp_path / "calls.log")
+    src = logged_source(spark, log, [(2, "B"), (3, "c")], "k long, v string")
+    t.merge(src, ["k"], order_by=[F.col("v")])
+    assert len(read_log(log)) == 1
+    got = sorted((r["k"], r["v"]) for r in t.read().collect())
+    assert got == [(1, "a"), (2, "B"), (3, "c")]
+
+
+def test_merge_nondeterministic_source_keeps_keys_unique(spark, tmp_path):
+    """A source returning a random subset of keys per call: the commit
+    holds unique keys, replaces those it returned and keeps the rest."""
+    from .conftest import logged_source, read_log
+
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    keys = range(20)
+    t.merge(spark.createDataFrame([(k, "old") for k in keys], "k long, v string"), ["k"])
+    log = str(tmp_path / "calls.log")
+    src = logged_source(spark, log, [(k, "new") for k in keys], "k long, v string", random_subset=True)
+    t.merge(src, ["k"])
+    rows = [(r["k"], r["v"]) for r in t.read().collect()]
+    assert len(rows) == len({k for k, _ in rows}), "duplicate keys"
+    (returned,) = read_log(log)
+    assert sorted(rows) == [(k, "new" if k in returned else "old") for k in keys]
+
+
 def test_changes_between_snapshots_cdf(spark, tmp_path):
     """Change data feed: keyed diff of two snapshots yields exact
     insert / delete / update pre+post rows — the surface an
