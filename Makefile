@@ -13,9 +13,16 @@ sweep:          ## cross-SF oracle sweep: every oracle at sf0.001 and sf0.1
 bench:          ## headline bench (sf0.1 unless SPARK_GRAFT_SF_DIR overrides)
 	python bench.py
 
-perf:           ## repo benchmark: each BENCHMARK.json workload once (seed 1, untraced) + accessor pins
-	python3 perfbench/run.py --workload query-tail --seed 1 --seconds 9 --trace 0
-	python3 perfbench/run.py --workload etl-lifecycle --seed 1 --seconds 9 --trace 0
+# exit 0 iff the last line on stdin is a run result with "correct": true
+# and 0 failed ops (perfbench/run.py prints its result as that line)
+PERF_OK = python3 -c 'import json, sys; r = json.loads(sys.stdin.read().splitlines()[-1]); sys.exit(0 if r["correct"] is True and r["failed"] == 0 else 1)'
+
+perf:           ## repo benchmark: each BENCHMARK.json workload once (seed 1, untraced) + accessor pins; fails on wrong outputs
+	@for w in query-tail etl-lifecycle; do \
+	  out=$$(python3 perfbench/run.py --workload $$w --seed 1 --seconds 9 --trace 0) || exit 1; \
+	  echo "$$out"; \
+	  printf '%s\n' "$$out" | $(PERF_OK) || { echo "perf: $$w: wrong outputs or failed ops" >&2; exit 1; }; \
+	done
 	python -m pytest perfbench/tests -q
 
 WORKLOAD ?= etl-lifecycle

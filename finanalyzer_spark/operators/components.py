@@ -41,25 +41,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: Largest per-node frame (rows) the loop operators will hard-hint
-#: F.broadcast on when `broadcast_nodes` is left as None (auto). A
-#: (long, long) row costs ~50 bytes in the driver-built hash relation,
-#: so 2M rows ≈ 100 MB — safely inside a 4-8 GiB executor while far
-#: above the dimension-sized graphs these plans run on. F.broadcast
-#: bypasses autoBroadcastJoinThreshold, so auto mode gates it on a
-#: MEASURED node count instead of hinting unconditionally: a web-scale
-#: node set falls back to shuffle joins rather than OOMing the driver.
+#: F.broadcast on. A (long, long) row costs ~50 bytes in the
+#: driver-built hash relation, so 2M rows ≈ 100 MB — safely inside a
+#: 4-8 GiB executor while far above the dimension-sized graphs these
+#: plans run on. F.broadcast bypasses autoBroadcastJoinThreshold, so
+#: the hint is gated on a MEASURED node count instead of given
+#: unconditionally: a web-scale node set falls back to shuffle joins
+#: rather than OOMing the driver.
 BROADCAST_NODE_CAP = 2_000_000
 
 
-def resolve_broadcast_nodes(
-    broadcast_nodes: bool | None, n_nodes: int
-) -> bool:
-    """Auto-gate for the per-round node-frame broadcast hint: an
-    explicit True/False wins; None broadcasts iff the measured node
-    count fits BROADCAST_NODE_CAP."""
-    if broadcast_nodes is None:
-        return n_nodes <= BROADCAST_NODE_CAP
-    return broadcast_nodes
+def resolve_broadcast_nodes(n_nodes: int) -> bool:
+    """Gate for the per-round node-frame broadcast hint: broadcast iff
+    the measured node count fits BROADCAST_NODE_CAP."""
+    return n_nodes <= BROADCAST_NODE_CAP
 
 
 def connected_components(
@@ -67,7 +62,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    broadcast_nodes: bool | None = None,
     symmetric: bool = False,
 ) -> DataFrame:
     """(node, component) for every node appearing in `edges`;
@@ -78,16 +72,15 @@ def connected_components(
     loop that exhausts `max_iter` raises RuntimeError rather than
     return unconverged labels.
 
-    Per round (the kcore/label-prop discipline, r10): the label frame
+    Per round (the kcore/label-prop discipline): the label frame
     — one row per node, shrinking in label cardinality — is
     localCheckpointed once and BROADCAST into the neighbor join, so
     the persisted symmetric edge frame never re-shuffles inside the
     loop; the min-label frame is materialized BEFORE the pointer-jump
     self-join (both join sides derive from it — without the
     checkpoint the union+groupBy subtree executes twice per round).
-    `broadcast_nodes=None` (default) measures the node count once and
-    broadcasts only under BROADCAST_NODE_CAP; True/False force it.
-    `symmetric=True` (r13) promises the input already contains both
+    The node count is measured once, and the label frame is broadcast
+    only under BROADCAST_NODE_CAP. `symmetric=True` promises the input already contains both
     directions of every edge (e.g. grid-DBSCAN's pair stream, built by
     a symmetric neighborhood join), skipping the union + distinct
     exchange — correctness never needed the dedup (duplicate edges
@@ -112,7 +105,7 @@ def connected_components(
         .localCheckpoint()
     )
 
-    # fixpoint test via the label-sum invariant (r12): every update
+    # fixpoint test via the label-sum invariant: every update
     # strictly DECREASES some node's label and never increases any, so
     # the exact sum of labels is strictly monotone decreasing until the
     # fixpoint — "no label changed this round" ⟺ "sum unchanged". The
@@ -128,16 +121,14 @@ def connected_components(
         ).first()[0]
 
     # ONE aggregate over the materialized checkpoint yields both the
-    # node count (loop-invariant; decides the per-round broadcast hint
-    # in auto mode) and the ROUND-0 label sum (r13) — the old code
-    # spent a separate count() job and left prev_sum unseeded, so an
-    # input already at its fixpoint after the init fold still paid two
-    # full rounds before the sums could match; seeding from round 0
-    # breaks after ONE round (3 jobs saved on near-clique graphs).
+    # node count (loop-invariant; decides the per-round broadcast hint)
+    # and the ROUND-0 label sum. Seeding prev_sum from round 0 lets an
+    # input already at its fixpoint after the init fold break after ONE
+    # round instead of two (3 jobs saved on near-clique graphs).
     n_nodes, prev_sum = labels.agg(
         F.count("*"), F.sum(F.col("label").cast("decimal(38,0)"))
     ).first()
-    broadcast_nodes = resolve_broadcast_nodes(broadcast_nodes, n_nodes)
+    broadcast_nodes = resolve_broadcast_nodes(n_nodes)
 
     for _ in range(max_iter):
         lab_b = F.broadcast(labels) if broadcast_nodes else labels
@@ -145,9 +136,9 @@ def connected_components(
             lab_b.withColumnRenamed("node", "b"), "b"
         ).select(F.col("a").alias("node"), "label")
         # materialize the min-label frame once: the pointer-jump
-        # self-join consumes it on BOTH sides. (r12 tried skipping
-        # this checkpoint in broadcast mode and re-running the small
-        # groupBy on the broadcast side — paired A/B showed the
+        # self-join consumes it on BOTH sides. (Skipping this
+        # checkpoint in broadcast mode and re-running the small groupBy
+        # on the broadcast side was measured in paired A/B runs: the
         # re-executed exchange + broadcast build cost MORE than the
         # checkpoint job it saved, consistently across the whole loop
         # family. Checkpoint-per-consumed-frame stands.)

@@ -191,7 +191,6 @@ def kcore(
     dst: str = "dst",
     max_iters: int = 100,
     dedup: bool = True,
-    broadcast_nodes: bool | None = None,
 ) -> DataFrame:
     """Nodes of the k-core: the maximal subgraph where every node has
     degree >= k, by iterated peeling — drop all nodes with degree < k,
@@ -213,10 +212,10 @@ def kcore(
 
     Broadcasting the node frame is scale-safe: the k-core node set is
     bounded by |V| ids (the co-supply graph's |V| is the supplier
-    dimension), and it only shrinks per round; `broadcast_nodes=None`
-    (default) gates the hint per round on the measured surviving node
-    count vs components.BROADCAST_NODE_CAP — a node set over budget
-    peels with the original shuffle semi-joins (True/False force it).
+    dimension), and it only shrinks per round; the hint is gated per
+    round on the measured surviving node count vs
+    components.BROADCAST_NODE_CAP — a node set over budget peels with
+    the original shuffle semi-joins.
 
     Input contract: `edges_sym` is the SYMMETRIC edge list (both
     (u,v) and (v,u) present). Duplicate edge rows would inflate
@@ -243,8 +242,8 @@ def kcore(
         # materialize the surviving-node frame ONCE per round: the
         # convergence count and both semi-joins below all reuse it,
         # instead of re-running the degree aggregate three times
-        # (r12 A/B re-confirmed: skipping this checkpoint in broadcast
-        # mode regressed the peel — re-executed aggregates cost more
+        # (paired A/B runs: skipping this checkpoint in broadcast mode
+        # regressed the peel — re-executed aggregates cost more
         # than the checkpoint job's scheduling round-trip)
         keep = (
             deg.where(F.col("deg") >= k)
@@ -260,7 +259,7 @@ def kcore(
         prev_n = n
         # kcore already has the per-round node count in hand — gate the
         # broadcast hint on it round by round (the set only shrinks)
-        bcast = resolve_broadcast_nodes(broadcast_nodes, n)
+        bcast = resolve_broadcast_nodes(n)
         keep_b = F.broadcast(keep) if bcast else keep
         e = (
             e.join(keep_b.withColumnRenamed("node", "src"), "src", "left_semi")
@@ -388,7 +387,6 @@ def label_propagation_fixed(
     iters: int,
     src: str = "src",
     dst: str = "dst",
-    broadcast_nodes: bool | None = None,
 ) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007) with the
     deterministic tie-break the oracle can replicate: every node
@@ -406,9 +404,9 @@ def label_propagation_fixed(
     window max over the per-(node, label) counts (bounded per-key
     frame, not a global window) followed by a co-partitioned groupBy —
     one checkpoint job and two node-keyed shuffles per round, no
-    self-join, no driver state.  `broadcast_nodes=None` (default)
-    measures the node count once and broadcasts only under
-    components.BROADCAST_NODE_CAP (True/False force it).
+    self-join, no driver state.  The node count is measured once, and
+    the label frame is broadcast only under
+    components.BROADCAST_NODE_CAP.
     Returns (node, label)."""
     e = edges_sym.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     e = e.persist()
@@ -419,8 +417,8 @@ def label_propagation_fixed(
         .localCheckpoint()
     )
     # node cardinality is loop-invariant: one count over the
-    # materialized checkpoint decides the broadcast hint in auto mode
-    broadcast_nodes = resolve_broadcast_nodes(broadcast_nodes, labels.count())
+    # materialized checkpoint decides the broadcast hint
+    broadcast_nodes = resolve_broadcast_nodes(labels.count())
     by_node = Window.partitionBy("node")
     for _ in range(iters):
         lab_b = F.broadcast(labels) if broadcast_nodes else labels

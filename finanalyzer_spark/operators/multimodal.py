@@ -48,12 +48,12 @@ Scale notes:
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .rows import map_rows
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -1055,27 +1055,23 @@ def decode_image_features(
 
     schema = f"{id_col} long, feature array<float>"
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(mid, buf):
         import numpy as np
 
-        for pdf in batches:
-            feats = []
-            for buf in pdf[content_col]:
-                b = bytes(buf)
-                if fake:
-                    arr = np.frombuffer(b, dtype=np.uint8)
-                elif b[:2] == b"P6":
-                    arr = decode_ppm(b).ravel()
-                else:
-                    # optional codec tier: PIL when present, else
-                    # NotImplementedError (honest-unsupported)
-                    arr = decode_image_compressed(b).ravel()
-                hist, _ = np.histogram(arr, bins=dim, range=(0, 256))
-                total = max(int(hist.sum()), 1)
-                feats.append((hist / total).astype(np.float32))
-            yield pd.DataFrame({id_col: pdf[id_col], "feature": feats})
+        b = bytes(buf)
+        if fake:
+            arr = np.frombuffer(b, dtype=np.uint8)
+        elif b[:2] == b"P6":
+            arr = decode_ppm(b).ravel()
+        else:
+            # optional codec tier: PIL when present, else
+            # NotImplementedError (honest-unsupported)
+            arr = decode_image_compressed(b).ravel()
+        hist, _ = np.histogram(arr, bins=dim, range=(0, 256))
+        total = max(int(hist.sum()), 1)
+        yield mid, (hist / total).astype(np.float32)
 
-    return df.select(id_col, content_col).mapInPandas(kernel, schema=schema)
+    return map_rows(df.select(id_col, content_col), schema, row)
 
 
 def decode_audio_features(
@@ -1097,32 +1093,26 @@ def decode_audio_features(
 
     schema = f"{id_col} long, sample_rate int, n_frames long, rms double, peak int"
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(mid, buf):
         import numpy as np
 
-        for pdf in batches:
-            out = {id_col: [], "sample_rate": [], "n_frames": [], "rms": [], "peak": []}
-            for mid, buf in zip(pdf[id_col], pdf[content_col]):
-                b = bytes(buf)
-                if fake:
-                    rate = 8000
-                    n = (len(b) // 2) * 2
-                    samples = np.frombuffer(b[:n], dtype="<i2").reshape(-1, 1)
-                else:
-                    rate, samples = decode_audio(b)
-                s = samples.astype(np.float64)
-                out[id_col].append(mid)
-                out["sample_rate"].append(rate)
-                out["n_frames"].append(samples.shape[0])
-                out["rms"].append(
-                    float(np.sqrt((s * s).mean())) if samples.size else 0.0
-                )
-                out["peak"].append(
-                    int(np.abs(samples.astype(np.int32)).max()) if samples.size else 0
-                )
-            yield pd.DataFrame(out)
+        b = bytes(buf)
+        if fake:
+            rate = 8000
+            n = (len(b) // 2) * 2
+            samples = np.frombuffer(b[:n], dtype="<i2").reshape(-1, 1)
+        else:
+            rate, samples = decode_audio(b)
+        s = samples.astype(np.float64)
+        yield (
+            mid,
+            rate,
+            samples.shape[0],
+            float(np.sqrt((s * s).mean())) if samples.size else 0.0,
+            int(np.abs(samples.astype(np.int32)).max()) if samples.size else 0,
+        )
 
-    return df.select(id_col, content_col).mapInPandas(kernel, schema=schema)
+    return map_rows(df.select(id_col, content_col), schema, row)
 
 
 def sample_video_frames_arrow(
@@ -1187,32 +1177,18 @@ def resize_images(
 
     schema = f"{id_col} long, height int, width int, pixels array<float>"
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(mid, buf):
         import numpy as np
 
-        for pdf in batches:
-            ids, pix = [], []
-            for mid, buf in zip(pdf[id_col], pdf[content_col]):
-                b = bytes(buf)
-                img = (
-                    decode_ppm(b) if b[:2] == b"P6" else decode_image_compressed(b)
-                )
-                h, w, _ = img.shape
-                rows = (np.arange(target_h) * h) // target_h
-                cols = (np.arange(target_w) * w) // target_w
-                small = img[rows][:, cols].astype(np.float32) / 255.0
-                ids.append(mid)
-                pix.append(small.ravel())
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "height": [target_h] * len(ids),
-                    "width": [target_w] * len(ids),
-                    "pixels": pix,
-                }
-            )
+        b = bytes(buf)
+        img = decode_ppm(b) if b[:2] == b"P6" else decode_image_compressed(b)
+        h, w, _ = img.shape
+        rows = (np.arange(target_h) * h) // target_h
+        cols = (np.arange(target_w) * w) // target_w
+        small = img[rows][:, cols].astype(np.float32) / 255.0
+        yield mid, target_h, target_w, small.ravel()
 
-    return df.select(id_col, content_col).mapInPandas(kernel, schema=schema)
+    return map_rows(df.select(id_col, content_col), schema, row)
 
 
 def sample_video_frames(
@@ -1236,29 +1212,23 @@ def sample_video_frames(
 
     schema = f"{id_col} long, frame_no int, frame binary"
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id, out_no, out_fr = [], [], []
-            for mid, buf in zip(pdf[id_col], pdf[content_col]):
-                b = bytes(buf)
-                if fake:
-                    frames = (
-                        (i // every_n_bytes, b[i : i + every_n_bytes])
-                        for i in range(0, len(b), every_n_bytes)
-                    )
-                elif b.startswith(b"YUV4MPEG2"):
-                    frames = demux_y4m(b)
-                else:
-                    # optional codec tier: PyAV when present, else
-                    # NotImplementedError (honest-unsupported)
-                    frames = demux_video_compressed(b)
-                for no, fr in frames:
-                    out_id.append(mid)
-                    out_no.append(no)
-                    out_fr.append(fr)
-            yield pd.DataFrame({id_col: out_id, "frame_no": out_no, "frame": out_fr})
+    def row(mid, buf):
+        b = bytes(buf)
+        if fake:
+            frames = (
+                (i // every_n_bytes, b[i : i + every_n_bytes])
+                for i in range(0, len(b), every_n_bytes)
+            )
+        elif b.startswith(b"YUV4MPEG2"):
+            frames = demux_y4m(b)
+        else:
+            # optional codec tier: PyAV when present, else
+            # NotImplementedError (honest-unsupported)
+            frames = demux_video_compressed(b)
+        for no, fr in frames:
+            yield mid, no, fr
 
-    return df.select(id_col, content_col).mapInPandas(kernel, schema=schema)
+    return map_rows(df.select(id_col, content_col), schema, row)
 
 
 def extract_patches(
@@ -1283,33 +1253,25 @@ def extract_patches(
     th, tw = grid_h * patch, grid_w * patch
     schema = f"{id_col} long, patch_no int, patch array<float>"
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def row(mid, buf):
         import numpy as np
 
-        for pdf in batches:
-            ids, nos, vecs = [], [], []
-            for mid, buf in zip(pdf[id_col], pdf[content_col]):
-                b = bytes(buf)
-                img = (
-                    decode_ppm(b) if b[:2] == b"P6" else decode_image_compressed(b)
-                )
-                h, w, _ = img.shape
-                rows = (np.arange(th) * h) // th
-                cols = (np.arange(tw) * w) // tw
-                canvas = img[rows][:, cols].astype(np.float32) / 255.0
-                # (gh, p, gw, p, 3) -> (gh, gw, p, p, 3) -> (n, p*p*3)
-                patches = (
-                    canvas.reshape(grid_h, patch, grid_w, patch, 3)
-                    .transpose(0, 2, 1, 3, 4)
-                    .reshape(grid_h * grid_w, patch * patch * 3)
-                )
-                for no in range(patches.shape[0]):
-                    ids.append(mid)
-                    nos.append(no)
-                    vecs.append(patches[no])
-            yield pd.DataFrame({id_col: ids, "patch_no": nos, "patch": vecs})
+        b = bytes(buf)
+        img = decode_ppm(b) if b[:2] == b"P6" else decode_image_compressed(b)
+        h, w, _ = img.shape
+        rows = (np.arange(th) * h) // th
+        cols = (np.arange(tw) * w) // tw
+        canvas = img[rows][:, cols].astype(np.float32) / 255.0
+        # (gh, p, gw, p, 3) -> (gh, gw, p, p, 3) -> (n, p*p*3)
+        patches = (
+            canvas.reshape(grid_h, patch, grid_w, patch, 3)
+            .transpose(0, 2, 1, 3, 4)
+            .reshape(grid_h * grid_w, patch * patch * 3)
+        )
+        for no in range(patches.shape[0]):
+            yield mid, no, patches[no]
 
-    return df.select(id_col, content_col).mapInPandas(kernel, schema=schema)
+    return map_rows(df.select(id_col, content_col), schema, row)
 
 
 #: MPEG-audio tables (ISO 11172-3 / 13818-3): bitrates in kbps by
@@ -2156,60 +2118,45 @@ def parse_id3v2(buf: bytes) -> dict[str, str]:
 # plans/multimodal.media_dhash_cross_format_dedup and the streaming
 # twin streaming/stateful.dhash_dedup_increments)
 # --------------------------------------------------------------------------
-def media_dhash_kernel(side: int):
-    """mapInPandas kernel factory: for each (media_id, k, fmt) row,
+MEDIA_DHASH_SCHEMA = "media_id long, fmt long, dhash long, blob_md5 string"
+
+
+def media_dhash_row(side: int):
+    """`map_rows` row-function factory: for each (media_id, k, fmt) row,
     REALLY ENCODE the k-keyed side×side gradient pattern with the
     fmt-selected codec (PNG / QOI / BMP24), decode it back with the
     matching pure-numpy decoder, and compute the side*(side-1)-bit
     difference hash over the recovered pixels. Only the 8-byte hash,
     the format id and the blob's md5 exit the kernel — payload bytes
     never shuffle. Works identically on batch and streaming frames
-    (no window, no state)."""
+    (no window, no state). Output: `MEDIA_DHASH_SCHEMA`."""
 
-    def kernel(batches):
+    def row(media_id, k, fmt):
         import hashlib
 
         import numpy as np
-        import pandas as pd
 
         from .qoi import decode_qoi, encode_qoi
 
-        for pdf in batches:
-            rows = []
-            for media_id, k, fmt in zip(
-                pdf["media_id"], pdf["k"], pdf["fmt"]
-            ):
-                k = int(k)
-                r, c = np.meshgrid(
-                    np.arange(side), np.arange(side), indexing="ij"
-                )
-                v = ((k * 7 + r * 16 + c * 29) % 256).astype(np.uint8)
-                img = np.stack([v, v, v], axis=-1)
-                if fmt == 0:
-                    blob = encode_png(img)
-                    dec = decode_png(blob)
-                elif fmt == 1:
-                    blob = encode_qoi(img)
-                    dec = decode_qoi(blob)
-                else:
-                    blob = encode_bmp24(img)
-                    dec = decode_bmp(blob)
-                gray = np.asarray(dec)[:, :, 0].astype(np.int64)
-                bits = (gray[:, 1:] > gray[:, :-1]).astype(np.int64)
-                weights = (
-                    1 << np.arange(side * (side - 1), dtype=np.int64)
-                ).reshape(side, side - 1)
-                dhash = int((bits * weights).sum())
-                rows.append(
-                    {
-                        "media_id": int(media_id),
-                        "fmt": int(fmt),
-                        "dhash": dhash,
-                        "blob_md5": hashlib.md5(blob).hexdigest(),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "fmt", "dhash", "blob_md5"]
-            )
+        k = int(k)
+        r, c = np.meshgrid(np.arange(side), np.arange(side), indexing="ij")
+        v = ((k * 7 + r * 16 + c * 29) % 256).astype(np.uint8)
+        img = np.stack([v, v, v], axis=-1)
+        if fmt == 0:
+            blob = encode_png(img)
+            dec = decode_png(blob)
+        elif fmt == 1:
+            blob = encode_qoi(img)
+            dec = decode_qoi(blob)
+        else:
+            blob = encode_bmp24(img)
+            dec = decode_bmp(blob)
+        gray = np.asarray(dec)[:, :, 0].astype(np.int64)
+        bits = (gray[:, 1:] > gray[:, :-1]).astype(np.int64)
+        weights = (
+            1 << np.arange(side * (side - 1), dtype=np.int64)
+        ).reshape(side, side - 1)
+        dhash = int((bits * weights).sum())
+        yield int(media_id), int(fmt), dhash, hashlib.md5(blob).hexdigest()
 
-    return kernel
+    return row

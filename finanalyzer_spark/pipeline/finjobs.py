@@ -40,6 +40,9 @@ from .merge import merge_into, overwrite_atomic, recover_swap
 
 MAX_DATA_HISTORY_YEARS = 10  # reference constants.py:1
 RETENTION_DAYS = 3650  # findatabase.py:50: 365 * years
+#: survivor of a duplicated history key: the latest ingest, then the
+#: higher close (columns sorted descending)
+_SURVIVOR_DESC = ("date_added", "close")
 
 
 class FinStore:
@@ -83,10 +86,9 @@ class FinStore:
         recover_swap(self.path(table))
         return read_parquet(self.spark, self.path(table))
 
-    def write(self, df: DataFrame, table: str, mode: str = "overwrite") -> None:
-        df.write.mode(mode).parquet(self.path(table))
-        if mode == "overwrite":
-            remember_schema(self.path(table), df)
+    def write(self, df: DataFrame, table: str) -> None:
+        df.write.mode("overwrite").parquet(self.path(table))
+        remember_schema(self.path(table), df)
 
     def overwrite_atomic(self, df: DataFrame, table: str) -> None:
         """Stage-and-swap overwrite — safe even when `df` reads the
@@ -144,7 +146,7 @@ class VersionedFinStore(FinStore):
     def read(self, table: str) -> DataFrame:
         return self.table(table).read()
 
-    def write(self, df: DataFrame, table: str, mode: str = "overwrite") -> None:
+    def write(self, df: DataFrame, table: str) -> None:
         self.table(table).commit(df)
 
     def overwrite_atomic(self, df: DataFrame, table: str) -> None:
@@ -232,6 +234,21 @@ def _freshness(history: DataFrame, names: DataFrame, today: dt.date) -> DataFram
     )
 
 
+def _land_history(fetched: DataFrame, names: DataFrame, day: dt.date) -> DataFrame:
+    """Feed rows (ticker, date_value, OHLC) → history rows: the
+    broadcast registry gives each row its surrogate id, and `day` is
+    its date_added."""
+    return fetched.join(F.broadcast(names.select("id", "ticker")), "ticker").select(
+        F.col("id").alias("names_id"),
+        F.col("date_value").cast("date"),
+        F.lit(day.isoformat()).cast("date").alias("date_added"),
+        "open",
+        "high",
+        "low",
+        "close",
+    )
+
+
 def update_history(
     store: FinStore,
     today: dt.date,
@@ -256,19 +273,7 @@ def update_history(
         F.col("start_date").cast("string"),
         F.col("end_date").cast("string"),
     )
-    fetched = fetch_history(tasks, feed)
-    incoming = (
-        fetched.join(F.broadcast(names.select("id", "ticker")), "ticker")
-        .select(
-            F.col("id").alias("names_id"),
-            F.col("date_value").cast("date"),
-            F.lit(today.isoformat()).cast("date").alias("date_added"),
-            "open",
-            "high",
-            "low",
-            "close",
-        )
-    )
+    incoming = _land_history(fetch_history(tasks, feed), names, today)
     # Keyed upsert + fused retention through the merge seam: incoming
     # rows replace matched (names_id, date_value) keys, within-batch
     # duplicates resolve deterministically, and rows outside the 10-y
@@ -280,7 +285,7 @@ def update_history(
         "history",
         incoming,
         ["names_id", "date_value"],
-        order_by=[F.col("date_added").desc(), F.col("close").desc()],
+        order_by=[F.col(c).desc() for c in _SURVIVOR_DESC],
         retain=F.col("date_added")
         >= F.date_sub(F.lit(today.isoformat()).cast("date"), RETENTION_DAYS),
     )
@@ -330,18 +335,7 @@ def stream_update_history(
         .option("wait_secs", str(wait_secs))
         .load()
     )
-    incoming = stream.join(
-        F.broadcast(names.select("id", "ticker")), "ticker"
-    ).select(
-        F.col("id").alias("names_id"),
-        F.col("date_value").cast("date"),
-        F.lit(end.isoformat()).cast("date").alias("date_added"),
-        "open",
-        "high",
-        "low",
-        "close",
-    )
-    writer = incoming.writeStream.foreachBatch(
+    writer = _land_history(stream, names, end).writeStream.foreachBatch(
         store.merge_sink("history", ["names_id", "date_value"])
     ).outputMode("append")
     if checkpoint_dir:
@@ -369,23 +363,10 @@ def fill_all_history(
         F.lit(start.isoformat()).alias("start_date"),
         F.lit(today.isoformat()).alias("end_date"),
     ).repartition(store.spark.sparkContext.defaultParallelism, "ticker")
-    fetched = fetch_history(tasks, feed)
-    incoming = (
-        fetched.join(F.broadcast(names.select("id", "ticker")), "ticker")
-        .select(
-            F.col("id").alias("names_id"),
-            F.col("date_value").cast("date"),
-            F.lit(today.isoformat()).cast("date").alias("date_added"),
-            "open",
-            "high",
-            "low",
-            "close",
-        )
-    )
     deduped = dedup_by_key(
-        incoming,
+        _land_history(fetch_history(tasks, feed), names, today),
         ["names_id", "date_value"],
-        [F.col("date_added").desc(), F.col("close").desc()],
+        [F.col(c).desc() for c in _SURVIVOR_DESC],
     )
     store.write(deduped, "history")
     return store.read("history")

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.rank import ordered_scan
+from ..operators.rows import map_rows
 from ..operators.text import tokens_col, word_ngrams_col
 from .registry import query
 
@@ -1264,7 +1265,7 @@ def luhn_pii_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Unicode NFC normalization audit (round 9)
+# Unicode NFC normalization audit
 # --------------------------------------------------------------------------
 #: per-doc synthesized suffixes exercising the NFC cases a crawl hits:
 #: combining sequences that compose, precomposed text that is already
@@ -1327,31 +1328,18 @@ def unicode_nfc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", F.substring("text", 1, 8).alias("prefix")
     )
 
-    def kernel(batches):
+    suffix = {
+        0: "é", 1: "Å", 2: "é", 3: "ﬁ",
+    }
+
+    def row(doc_id, source, prefix):
         import unicodedata
 
-        import pandas as pd
+        s = prefix + suffix[int(doc_id) % 4]
+        n = unicodedata.normalize("NFC", s)
+        yield source, int(n != s), len(n) - len(s)
 
-        suffix = {
-            0: "é", 1: "Å", 2: "é", 3: "ﬁ",
-        }
-        for pdf in batches:
-            rows = []
-            for doc_id, source, prefix in zip(
-                pdf["doc_id"], pdf["source"], pdf["prefix"]
-            ):
-                s = prefix + suffix[int(doc_id) % 4]
-                n = unicodedata.normalize("NFC", s)
-                rows.append(
-                    (source, int(n != s), len(n) - len(s))
-                )
-            yield pd.DataFrame(
-                rows, columns=["source", "ch", "delta"]
-            )
-
-    per_doc = docs.mapInPandas(
-        kernel, schema="source string, ch int, delta int"
-    )
+    per_doc = map_rows(docs, "source string, ch int, delta int", row)
     return per_doc.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum("ch").cast("long").alias("n_changed"),

@@ -28,6 +28,7 @@ from ..operators.multimodal import (
     encode_wav_pcm16,
     sample_video_frames,
 )
+from ..operators.rows import map_rows
 from .registry import query
 
 FRAME_BYTES = 64
@@ -108,42 +109,28 @@ def _pixel_stats_query(name, codec, roundtrip, tags, doc):
         t = load(spark, sf_dir)
         docs = t.documents.select("doc_id", "text")
 
-        def kernel(batches):
+        def row(doc_id, text):
             import importlib
 
             import numpy as np
-            import pandas as pd
 
             c = importlib.import_module(f"..operators.{codec}", __package__)
-            for pdf in batches:
-                rows = []
-                for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                    w, img = _doc_image(text)
-                    dec = roundtrip(c, img)
-                    rows.append(
-                        {
-                            "media_id": int(doc_id),
-                            "width": w,
-                            "height": 8,
-                            "n_pixels": int(dec.shape[0] * dec.shape[1]),
-                            "px_sum": int(dec.astype(np.int64).sum()),
-                            "px_max": int(dec.max()),
-                        }
-                    )
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "media_id", "width", "height", "n_pixels",
-                        "px_sum", "px_max",
-                    ],
-                )
+            w, img = _doc_image(text)
+            dec = roundtrip(c, img)
+            yield (
+                int(doc_id),
+                w,
+                8,
+                int(dec.shape[0] * dec.shape[1]),
+                int(dec.astype(np.int64).sum()),
+                int(dec.max()),
+            )
 
-        return docs.repartition(8).mapInPandas(
-            kernel,
-            schema=(
-                "media_id long, width int, height int, n_pixels long,"
-                " px_sum long, px_max int"
-            ),
+        return map_rows(
+            docs.repartition(8),
+            "media_id long, width int, height int, n_pixels long,"
+            " px_sum long, px_max int",
+            row,
         )
 
     build.__name__ = build.__qualname__ = name
@@ -376,21 +363,10 @@ def media_wav_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("content"),
     )
 
-    def wrap(batches):
-        import pandas as pd
+    def wrap(media_id, content):
+        yield media_id, encode_wav_pcm16(bytes(content), rate=8000, channels=1)
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content": [
-                        encode_wav_pcm16(bytes(b), rate=8000, channels=1)
-                        for b in pdf["content"]
-                    ],
-                }
-            )
-
-    wav = pcm.mapInPandas(wrap, schema="media_id long, content binary")
+    wav = map_rows(pcm, "media_id long, content binary", wrap)
     feats = decode_audio_features(
         wav, content_col="content", id_col="media_id", fake=False
     )
@@ -461,24 +437,15 @@ def media_flac_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def wrap(batches):
+    def wrap(media_id, content):
         import numpy as np
-        import pandas as pd
 
         from ..operators.flac import encode_flac
 
-        for pdf in batches:
-            out = []
-            for b in pdf["content"]:
-                samples = np.frombuffer(bytes(b), dtype="<i2")
-                out.append(
-                    encode_flac(samples, sample_rate=16000, blocksize=64)
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "content": out}
-            )
+        samples = np.frombuffer(bytes(content), dtype="<i2")
+        yield media_id, encode_flac(samples, sample_rate=16000, blocksize=64)
 
-    flac = pcm.mapInPandas(wrap, schema="media_id long, content binary")
+    flac = map_rows(pcm, "media_id long, content binary", wrap)
     feats = decode_audio_features(
         flac, content_col="content", id_col="media_id", fake=False
     )
@@ -725,44 +692,31 @@ def media_mp4_keyframe_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.length("text").alias("n_chars")
     )
 
-    def kernel(batches):
+    def row(doc_id, n_chars):
         import numpy as np
-        import pandas as pd
 
         from ..operators.mp4 import demux_mp4, mux_mp4_mjpeg
 
-        for pdf in batches:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                n = 1 + int(n_chars) % 4
-                fill = int(n_chars) % 256
-                frames = [
-                    np.full((8, 8, 3), (fill + i) % 256, dtype=np.uint8)
-                    for i in range(n)
-                ]
-                buf = mux_mp4_mjpeg(frames, fps=10, quality=80)
-                samples = list(demux_mp4(buf))
-                rows.append(
-                    (
-                        int(doc_id),
-                        len(samples),
-                        sum(1 for s in samples if s[3]),
-                        max(s[2] for s in samples),
-                        samples[0][4],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_samples", "n_keyframes", "last_ts_us",
-                    "fourcc",
-                ],
-            )
+        n = 1 + int(n_chars) % 4
+        fill = int(n_chars) % 256
+        frames = [
+            np.full((8, 8, 3), (fill + i) % 256, dtype=np.uint8)
+            for i in range(n)
+        ]
+        samples = list(demux_mp4(mux_mp4_mjpeg(frames, fps=10, quality=80)))
+        yield (
+            int(doc_id),
+            len(samples),
+            sum(1 for s in samples if s[3]),
+            max(s[2] for s in samples),
+            samples[0][4],
+        )
 
-    return docs.mapInPandas(
-        kernel,
-        schema="media_id long, n_samples long, n_keyframes long,"
+    return map_rows(
+        docs,
+        "media_id long, n_samples long, n_keyframes long,"
         " last_ts_us long, fourcc string",
+        row,
     )
 
 
@@ -804,40 +758,28 @@ def media_h264_stream_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.length("text").alias("n_chars")
     )
 
-    def kernel(batches):
+    def row(doc_id, n_chars):
         import numpy as np
-        import pandas as pd
 
         from ..operators.h264 import encode_h264_ipcm, h264_stream_index
 
-        for pdf in batches:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                n = 1 + int(n_chars) % 3
-                fill = int(n_chars) % 256
-                frames = [
-                    np.full((16, 16, 3), (fill + i) % 256, dtype=np.uint8)
-                    for i in range(n)
-                ]
-                idx = h264_stream_index(encode_h264_ipcm(frames))
-                rows.append(
-                    (
-                        int(doc_id), idx["n_nals"], idx["n_idr"],
-                        idx["width"], idx["height"], idx["profile_idc"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_nals", "n_keyframes", "width",
-                    "height", "profile_idc",
-                ],
-            )
+        n = 1 + int(n_chars) % 3
+        fill = int(n_chars) % 256
+        frames = [
+            np.full((16, 16, 3), (fill + i) % 256, dtype=np.uint8)
+            for i in range(n)
+        ]
+        idx = h264_stream_index(encode_h264_ipcm(frames))
+        yield (
+            int(doc_id), idx["n_nals"], idx["n_idr"],
+            idx["width"], idx["height"], idx["profile_idc"],
+        )
 
-    return docs.mapInPandas(
-        kernel,
-        schema="media_id long, n_nals long, n_keyframes long,"
+    return map_rows(
+        docs,
+        "media_id long, n_nals long, n_keyframes long,"
         " width int, height int, profile_idc int",
+        row,
     )
 
 
@@ -891,59 +833,45 @@ def media_h264_intra_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def kernel(batches):
+    def row(doc_id, n_chars):
         import numpy as np
-        import pandas as pd
 
         from ..operators.h264 import decode_h264_annexb
         from ..operators.h264_cavlc import encode_h264_intra
 
         ys, xs = np.mgrid[0:32, 0:32]
-        for pdf in batches:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                off = int(n_chars)
-                y = ((ys * 3 + xs * 5 + off) % 256).astype(np.uint8)
-                cbp = np.full((16, 16), (off * 2) % 256, np.uint8)
-                crp = np.full((16, 16), (off * 3) % 256, np.uint8)
-                recon: list = []
-                stream = encode_h264_intra(
-                    [(y, cbp, crp)], qp=24, yuv=True, recon_out=recon
-                )
-                decoded = list(decode_h264_annexb(stream, yuv=True))
-                gy, gcb, gcr = decoded[0][1]
-                exact = (
-                    np.array_equal(gy, recon[0][0])
-                    and np.array_equal(gcb, recon[0][1])
-                    and np.array_equal(gcr, recon[0][2])
-                )
-                err = float(
-                    np.abs(gy.astype(int) - y.astype(int)).mean()
-                )
-                rows.append(
-                    (
-                        int(doc_id),
-                        len(decoded),
-                        int(gy.shape[1]),
-                        int(gy.shape[0]),
-                        bool(exact),
-                        len(stream) < 32 * 32 * 3 // 2,
-                        err <= 4.0,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_frames", "width", "height",
-                    "exact_recon", "compresses", "err_in_budget",
-                ],
-            )
+        off = int(n_chars)
+        y = ((ys * 3 + xs * 5 + off) % 256).astype(np.uint8)
+        cbp = np.full((16, 16), (off * 2) % 256, np.uint8)
+        crp = np.full((16, 16), (off * 3) % 256, np.uint8)
+        recon: list = []
+        stream = encode_h264_intra(
+            [(y, cbp, crp)], qp=24, yuv=True, recon_out=recon
+        )
+        decoded = list(decode_h264_annexb(stream, yuv=True))
+        gy, gcb, gcr = decoded[0][1]
+        exact = (
+            np.array_equal(gy, recon[0][0])
+            and np.array_equal(gcb, recon[0][1])
+            and np.array_equal(gcr, recon[0][2])
+        )
+        err = float(np.abs(gy.astype(int) - y.astype(int)).mean())
+        yield (
+            int(doc_id),
+            len(decoded),
+            int(gy.shape[1]),
+            int(gy.shape[0]),
+            bool(exact),
+            len(stream) < 32 * 32 * 3 // 2,
+            err <= 4.0,
+        )
 
-    return docs.mapInPandas(
-        kernel,
-        schema="media_id long, n_frames long, width int, height int,"
+    return map_rows(
+        docs,
+        "media_id long, n_frames long, width int, height int,"
         " exact_recon boolean, compresses boolean,"
         " err_in_budget boolean",
+        row,
     )
 
 
@@ -977,7 +905,7 @@ def media_h264_gop_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Motion-compensated decode certification pass — the sampled
     check a video-corpus pipeline runs before trusting the inter
     tier for bulk work (doc_id % 23 keeps the heavy Python codec on
-    ~4% of documents).  Round 7: the stream is a DEFAULT baseline
+    ~4% of documents).  The stream is a DEFAULT baseline
     stream (deblocking active), so the certification covers the §8.7
     in-loop filter and filtered-reference motion compensation.
 
@@ -993,67 +921,52 @@ def media_h264_gop_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def kernel(batches):
+    def row(doc_id, n_chars):
         import numpy as np
-        import pandas as pd
 
         from ..operators.h264 import decode_h264_annexb, split_annexb
         from ..operators.h264_cavlc import encode_h264_intra
         from ..operators.h264_inter import encode_h264_video
 
         ys, xs = np.mgrid[0:32, 0:48]
-        for pdf in batches:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                off = int(n_chars)
-                base = ((ys * 3 + xs * 5 + off) % 256).astype(np.uint8)
-                frames = []
-                for i in range(3):
-                    frames.append(
-                        (
-                            np.roll(base, i * 2, axis=1)[:, :32].copy(),
-                            np.full((16, 16), (off * 2 + i) % 256,
-                                    np.uint8),
-                            np.full((16, 16), (off * 3 - i) % 256,
-                                    np.uint8),
-                        )
-                    )
-                recon: list = []
-                stream = encode_h264_video(
-                    frames, qp=26, gop=4, yuv=True, search_range=2,
-                    recon_out=recon, deblock=True,
-                )
-                decoded = list(decode_h264_annexb(stream, yuv=True))
-                exact = all(
-                    np.array_equal(g, x)
-                    for (_fn, got), want in zip(decoded, recon)
-                    for g, x in zip(got, want)
-                )
-                kinds = [t for t, _r, _ in split_annexb(stream)]
-                intra = encode_h264_intra(frames, qp=26, yuv=True)
-                rows.append(
-                    (
-                        int(doc_id),
-                        len(decoded),
-                        kinds.count(5),
-                        kinds.count(1),
-                        bool(exact),
-                        len(stream) < len(intra),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_frames", "n_keyframes", "n_p_frames",
-                    "exact_recon", "p_beats_intra",
-                ],
+        off = int(n_chars)
+        base = ((ys * 3 + xs * 5 + off) % 256).astype(np.uint8)
+        frames = [
+            (
+                np.roll(base, i * 2, axis=1)[:, :32].copy(),
+                np.full((16, 16), (off * 2 + i) % 256, np.uint8),
+                np.full((16, 16), (off * 3 - i) % 256, np.uint8),
             )
+            for i in range(3)
+        ]
+        recon: list = []
+        stream = encode_h264_video(
+            frames, qp=26, gop=4, yuv=True, search_range=2,
+            recon_out=recon, deblock=True,
+        )
+        decoded = list(decode_h264_annexb(stream, yuv=True))
+        exact = all(
+            np.array_equal(g, x)
+            for (_fn, got), want in zip(decoded, recon)
+            for g, x in zip(got, want)
+        )
+        kinds = [t for t, _r, _ in split_annexb(stream)]
+        intra = encode_h264_intra(frames, qp=26, yuv=True)
+        yield (
+            int(doc_id),
+            len(decoded),
+            kinds.count(5),
+            kinds.count(1),
+            bool(exact),
+            len(stream) < len(intra),
+        )
 
-    return docs.mapInPandas(
-        kernel,
-        schema="media_id long, n_frames long, n_keyframes long,"
+    return map_rows(
+        docs,
+        "media_id long, n_frames long, n_keyframes long,"
         " n_p_frames long, exact_recon boolean,"
         " p_beats_intra boolean",
+        row,
     )
 
 
@@ -1062,8 +975,8 @@ def media_h264_gop_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Per-document payloads cycle through TEN real formats (built by
     # the pure encoder twins: baseline JPEG, binary PPM, PCM-16 WAV,
     # MJPEG-in-MP4, I_PCM-H.264-in-MKV, MP3-with-Xing, CABAC-flagged
-    # Annex-B H.264, classic-DIB ICO, AVIF-with-av01-item, ADTS/AAC-LC
-    # — the last widened r10); the Spark side PROBES each payload with
+    # Annex-B H.264, classic-DIB ICO, AVIF-with-av01-item, ADTS/AAC-LC);
+    # the Spark side PROBES each payload with
     # operators/multimodal.probe_media (header/box/EBML parsing, no
     # pixel/sample decode) and rolls up by identified
     # kind/container/codec.  The oracle recomputes the rollup
@@ -1115,17 +1028,10 @@ def media_probe_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir)
     docs = t.documents.select("doc_id", F.length("text").alias("n_chars"))
 
-    def kernel(batches):
+    def row(doc_id, n_chars):
         import numpy as np
-        import pandas as pd
 
-        from ..operators.h264 import (
-            NAL_PPS,
-            NAL_SPS,
-            _nal,
-            encode_h264_ipcm,  # noqa: F401
-            write_sps_pps,
-        )
+        from ..operators.h264 import NAL_PPS, NAL_SPS, _nal, write_sps_pps
         from ..operators.ico import encode_ico
         from ..operators.jpeg import encode_jpeg
         from ..operators.mkv import mux_mkv
@@ -1137,55 +1043,43 @@ def media_probe_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             probe_media,
         )
 
-        for pdf in batches:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                fill = int(n_chars) % 256
-                img = np.full((8, 8, 3), fill, dtype=np.uint8)
-                vid = np.full((16, 16, 3), fill, dtype=np.uint8)
-                kind10 = int(doc_id) % 10
-                if kind10 == 0:
-                    payload = encode_jpeg(img, quality=80)
-                elif kind10 == 1:
-                    payload = b"P6\n8 8\n255\n" + img.tobytes()
-                elif kind10 == 2:
-                    payload = encode_wav_pcm16(
-                        bytes([fill]) * 64, rate=8000, channels=1
-                    )
-                elif kind10 == 3:
-                    payload = mux_mp4_mjpeg([vid], fps=10, quality=80)
-                elif kind10 == 4:
-                    payload = mux_mkv([vid], codec="avc", fps=10)
-                elif kind10 == 5:
-                    # perceptual audio: decode refuses, probe reports
-                    payload = encode_mpeg_audio_stub(
-                        n_frames=1 + fill % 5, xing=True
-                    )
-                elif kind10 == 7:
-                    payload = encode_ico(img)
-                elif kind10 == 8:
-                    # AV1 still image: decode refuses, probe NAMES it
-                    payload = encode_avif_stub(8, 8, "av1")
-                elif kind10 == 9:
-                    # ADTS/AAC: decode refuses (perceptual), probe
-                    # reports profile/rate/duration/bit_rate (r10)
-                    payload = encode_adts_stub(
-                        n_frames=1 + fill % 5, rate=44100, channels=2
-                    )
-                else:
-                    # CABAC-flagged stream: probe NAMES the refusal
-                    sps, pps = write_sps_pps(4, 4, cabac=True)
-                    payload = _nal(NAL_SPS, 3, sps) + _nal(
-                        NAL_PPS, 3, pps
-                    )
-                p = probe_media(bytes(payload))
-                rows.append((p["kind"], p["container"], p["codec"]))
-            yield pd.DataFrame(
-                rows, columns=["kind", "container", "codec"]
+        fill = int(n_chars) % 256
+        img = np.full((8, 8, 3), fill, dtype=np.uint8)
+        vid = np.full((16, 16, 3), fill, dtype=np.uint8)
+        kind10 = int(doc_id) % 10
+        if kind10 == 0:
+            payload = encode_jpeg(img, quality=80)
+        elif kind10 == 1:
+            payload = b"P6\n8 8\n255\n" + img.tobytes()
+        elif kind10 == 2:
+            payload = encode_wav_pcm16(bytes([fill]) * 64, rate=8000, channels=1)
+        elif kind10 == 3:
+            payload = mux_mp4_mjpeg([vid], fps=10, quality=80)
+        elif kind10 == 4:
+            payload = mux_mkv([vid], codec="avc", fps=10)
+        elif kind10 == 5:
+            # perceptual audio: decode refuses, probe reports
+            payload = encode_mpeg_audio_stub(n_frames=1 + fill % 5, xing=True)
+        elif kind10 == 7:
+            payload = encode_ico(img)
+        elif kind10 == 8:
+            # AV1 still image: decode refuses, probe NAMES it
+            payload = encode_avif_stub(8, 8, "av1")
+        elif kind10 == 9:
+            # ADTS/AAC: decode refuses (perceptual), probe
+            # reports profile/rate/duration/bit_rate
+            payload = encode_adts_stub(
+                n_frames=1 + fill % 5, rate=44100, channels=2
             )
+        else:
+            # CABAC-flagged stream: probe NAMES the refusal
+            sps, pps = write_sps_pps(4, 4, cabac=True)
+            payload = _nal(NAL_SPS, 3, sps) + _nal(NAL_PPS, 3, pps)
+        p = probe_media(bytes(payload))
+        yield p["kind"], p["container"], p["codec"]
 
-    probed = docs.mapInPandas(
-        kernel, schema="kind string, container string, codec string"
+    probed = map_rows(
+        docs, "kind string, container string, codec string", row
     )
     return probed.groupBy("kind", "container", "codec").agg(
         F.count("*").alias("n_media")
@@ -1217,8 +1111,8 @@ def media_probe_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "probe", "audio"),
 )
 def media_adts_probe_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ADTS/AAC probe certification (round 10, VERDICT r9 #5 — the
-    ADTS mirror of the r9 MP3-Xing work): per sampled document
+    """ADTS/AAC probe certification (the ADTS mirror of the MP3-Xing
+    probe): per sampled document
     (doc_id % 23 — the probe is cheap but the fixture build is
     per-row Python), build an ADTS stream whose frame count and frame
     length derive from the text, then report what probe_media's
@@ -1235,46 +1129,27 @@ def media_adts_probe_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.length("text").alias("n_chars"))
     )
 
-    def kernel(batches):
-        import pandas as pd
-
+    def row(doc_id, n_chars):
         from ..operators.multimodal import encode_adts_stub, probe_media
 
-        for pdf in batches:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                fill = int(n_chars) % 256
-                payload = encode_adts_stub(
-                    n_frames=1 + fill % 7, rate=48000, channels=2,
-                    body_bytes=32 + fill % 64,
-                )
-                p = probe_media(payload)
-                rows.append(
-                    {
-                        "media_id": int(doc_id),
-                        "codec": p["codec"],
-                        "sample_rate": p["sample_rate"],
-                        "channels": p["channels"],
-                        "n_frames": p["n_frames"],
-                        "duration_s": p["duration_s"],
-                        "bit_rate": p["bit_rate"],
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "codec", "sample_rate", "channels",
-                    "n_frames", "duration_s", "bit_rate",
-                ],
+        fill = int(n_chars) % 256
+        p = probe_media(
+            encode_adts_stub(
+                n_frames=1 + fill % 7, rate=48000, channels=2,
+                body_bytes=32 + fill % 64,
             )
+        )
+        yield (
+            int(doc_id), p["codec"], p["sample_rate"], p["channels"],
+            p["n_frames"], p["duration_s"], p["bit_rate"],
+        )
 
-    return docs.repartition(8).mapInPandas(
-        kernel,
-        schema=(
-            "media_id long, codec string, sample_rate long,"
-            " channels int, n_frames long, duration_s double,"
-            " bit_rate long"
-        ),
+    return map_rows(
+        docs.repartition(8),
+        "media_id long, codec string, sample_rate long,"
+        " channels int, n_frames long, duration_s double,"
+        " bit_rate long",
+        row,
     )
 
 
@@ -1309,7 +1184,7 @@ def media_h264_bframe_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B-slice decode certification pass — the sampled check a
     video-corpus pipeline runs before trusting the bi-predictive tier
     (doc_id % 29 keeps the heavy Python codec on ~3% of documents).
-    Exercises the full round-7 B stack end-to-end: POC type 0 parse +
+    Exercises the full B stack end-to-end: POC type 0 parse +
     display re-ordering, the two-list DPB, spatial direct derivation
     with the colocated-motion zero rule, B_Skip/B_Direct_16x16/
     B_L0/L1/Bi macroblocks with default bi-prediction averaging, and
@@ -1326,77 +1201,59 @@ def media_h264_bframe_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def kernel(batches):
+    def row(doc_id, n_chars):
         import numpy as np
-        import pandas as pd
 
         from ..operators.h264 import decode_h264_annexb, split_annexb
         from ..operators.h264_inter import encode_h264_video
 
         ys, xs = np.mgrid[0:32, 0:48]
-        for pdf in batches:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                off = int(n_chars)
-                base = ((ys * 3 + xs * 5 + off) % 256).astype(np.uint8)
-                frames = []
-                for i in range(6):
-                    frames.append(
-                        (
-                            np.roll(base, i * 2, axis=1)[:, :32].copy(),
-                            np.full((16, 16), (off * 2 + i) % 256,
-                                    np.uint8),
-                            np.full((16, 16), (off * 3 - i) % 256,
-                                    np.uint8),
-                        )
-                    )
-                recon: list = []
-                stream = encode_h264_video(
-                    frames, qp=26, gop=6, yuv=True, search_range=2,
-                    recon_out=recon, b_frames=1, deblock=True,
-                )
-                counts: list = []
-                decoded = list(
-                    decode_h264_annexb(stream, yuv=True,
-                                       counts_out=counts)
-                )
-                exact = all(
-                    np.array_equal(g, x)
-                    for (_fn, got), want in zip(decoded, recon)
-                    for g, x in zip(got, want)
-                )
-                n_nonref = sum(
-                    1 for t_, r_, _ in split_annexb(stream)
-                    if t_ == 1 and r_ == 0
-                )
-                n_b = sum(1 for c in counts if c["kind"] == "B")
-                order_ok = len(decoded) == 6 and all(
-                    float(np.abs(got[0].astype(int)
-                                 - frames[i][0].astype(int)).mean())
-                    <= 4.0
-                    for i, (_fn, got) in enumerate(decoded)
-                )
-                rows.append(
-                    (
-                        int(doc_id),
-                        len(decoded),
-                        min(n_b, n_nonref),
-                        bool(exact),
-                        bool(order_ok),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_frames", "n_b_pictures",
-                    "exact_recon", "display_order_ok",
-                ],
+        off = int(n_chars)
+        base = ((ys * 3 + xs * 5 + off) % 256).astype(np.uint8)
+        frames = [
+            (
+                np.roll(base, i * 2, axis=1)[:, :32].copy(),
+                np.full((16, 16), (off * 2 + i) % 256, np.uint8),
+                np.full((16, 16), (off * 3 - i) % 256, np.uint8),
             )
+            for i in range(6)
+        ]
+        recon: list = []
+        stream = encode_h264_video(
+            frames, qp=26, gop=6, yuv=True, search_range=2,
+            recon_out=recon, b_frames=1, deblock=True,
+        )
+        counts: list = []
+        decoded = list(
+            decode_h264_annexb(stream, yuv=True, counts_out=counts)
+        )
+        exact = all(
+            np.array_equal(g, x)
+            for (_fn, got), want in zip(decoded, recon)
+            for g, x in zip(got, want)
+        )
+        n_nonref = sum(
+            1 for t_, r_, _ in split_annexb(stream) if t_ == 1 and r_ == 0
+        )
+        n_b = sum(1 for c in counts if c["kind"] == "B")
+        order_ok = len(decoded) == 6 and all(
+            float(np.abs(got[0].astype(int) - frames[i][0].astype(int)).mean())
+            <= 4.0
+            for i, (_fn, got) in enumerate(decoded)
+        )
+        yield (
+            int(doc_id),
+            len(decoded),
+            min(n_b, n_nonref),
+            bool(exact),
+            bool(order_ok),
+        )
 
-    return docs.mapInPandas(
-        kernel,
-        schema="media_id long, n_frames long, n_b_pictures long,"
+    return map_rows(
+        docs,
+        "media_id long, n_frames long, n_b_pictures long,"
         " exact_recon boolean, display_order_ok boolean",
+        row,
     )
 
 
@@ -1506,46 +1363,26 @@ def media_g711_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir)
     docs = t.documents.select("doc_id", "text")
 
-    def kernel(batches):
+    def row(doc_id, text):
         import numpy as np
-        import pandas as pd
 
         from ..operators.g711 import alaw_decode, ulaw_decode
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                bs = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                n = min(len(bs), 512)
-                codes = ((bs[:n].astype(np.int32) * 131) % 256).astype(
-                    np.uint8
-                )
-                u = ulaw_decode(codes).astype(np.int64)
-                a = alaw_decode(codes).astype(np.int64)
-                rows.append(
-                    {
-                        "media_id": int(doc_id),
-                        "n_samples": n,
-                        "ulaw_sum": int(u.sum()),
-                        "ulaw_min": int(u.min()),
-                        "alaw_sum": int(a.sum()),
-                        "alaw_max": int(a.max()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_samples", "ulaw_sum", "ulaw_min",
-                    "alaw_sum", "alaw_max",
-                ],
-            )
+        bs = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+        n = min(len(bs), 512)
+        codes = ((bs[:n].astype(np.int32) * 131) % 256).astype(np.uint8)
+        u = ulaw_decode(codes).astype(np.int64)
+        a = alaw_decode(codes).astype(np.int64)
+        yield (
+            int(doc_id), n, int(u.sum()), int(u.min()),
+            int(a.sum()), int(a.max()),
+        )
 
-    return docs.repartition(8).mapInPandas(
-        kernel,
-        schema=(
-            "media_id long, n_samples int, ulaw_sum long, ulaw_min int,"
-            " alaw_sum long, alaw_max int"
-        ),
+    return map_rows(
+        docs.repartition(8),
+        "media_id long, n_samples int, ulaw_sum long, ulaw_min int,"
+        " alaw_sum long, alaw_max int",
+        row,
     )
 
 
@@ -1586,9 +1423,8 @@ def media_audio_container_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir)
     docs = t.documents.select("doc_id", "text")
 
-    def kernel(batches):
+    def row(doc_id, text):
         import numpy as np
-        import pandas as pd
 
         from ..operators.aiffau import (
             decode_aiff,
@@ -1598,49 +1434,28 @@ def media_audio_container_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         from ..operators.multimodal import decode_wav, encode_wav_pcm16
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                bs = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                n = min(len(bs), 256)
-                pcm = (
-                    (bs[:n].astype(np.int64) * 523) % 65536 - 32768
-                ).astype(np.int16)
-                _, sw = decode_wav(
-                    encode_wav_pcm16(pcm.tobytes(), rate=16000)
-                )
-                _, sa = decode_au(encode_au(pcm, rate=16000))
-                _, sf_ = decode_aiff(encode_aiff(pcm, rate=16000))
-                agree = (
-                    np.array_equal(sw, sa)
-                    and np.array_equal(sw, sf_)
-                    and np.array_equal(sw.ravel(), pcm)
-                )
-                s = sw.ravel().astype(np.int64)
-                rows.append(
-                    {
-                        "media_id": int(doc_id),
-                        "n_samples": n,
-                        "containers_agree": bool(agree),
-                        "pcm_sum": int(s.sum()),
-                        "pcm_min": int(s.min()),
-                        "pcm_max": int(s.max()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_samples", "containers_agree",
-                    "pcm_sum", "pcm_min", "pcm_max",
-                ],
-            )
+        bs = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+        n = min(len(bs), 256)
+        pcm = ((bs[:n].astype(np.int64) * 523) % 65536 - 32768).astype(np.int16)
+        _, sw = decode_wav(encode_wav_pcm16(pcm.tobytes(), rate=16000))
+        _, sa = decode_au(encode_au(pcm, rate=16000))
+        _, sf_ = decode_aiff(encode_aiff(pcm, rate=16000))
+        agree = (
+            np.array_equal(sw, sa)
+            and np.array_equal(sw, sf_)
+            and np.array_equal(sw.ravel(), pcm)
+        )
+        s = sw.ravel().astype(np.int64)
+        yield (
+            int(doc_id), n, bool(agree),
+            int(s.sum()), int(s.min()), int(s.max()),
+        )
 
-    return docs.repartition(8).mapInPandas(
-        kernel,
-        schema=(
-            "media_id long, n_samples int, containers_agree boolean,"
-            " pcm_sum long, pcm_min int, pcm_max int"
-        ),
+    return map_rows(
+        docs.repartition(8),
+        "media_id long, n_samples int, containers_agree boolean,"
+        " pcm_sum long, pcm_min int, pcm_max int",
+        row,
     )
 
 
@@ -1688,9 +1503,8 @@ def media_legacy_image_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir)
     docs = t.documents.select("doc_id", "text")
 
-    def kernel(batches):
+    def row(doc_id, text):
         import numpy as np
-        import pandas as pd
 
         from ..operators.legacyimg import (
             decode_pnm,
@@ -1701,50 +1515,29 @@ def media_legacy_image_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
             encode_sgi,
         )
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                bs = text.encode("utf-8")
-                w = max(1, min(len(bs) // 18, 64))
-                img = (
-                    np.frombuffer(bs[: w * 18], dtype=np.uint8)
-                    .reshape(6, w, 3)
-                )
-                r = decode_ras(encode_ras(img, rle=True))
-                s = decode_sgi(encode_sgi(img, rle=True))
-                p = decode_pnm(encode_pnm(img, 6))
-                agree = (
-                    np.array_equal(r, img)
-                    and np.array_equal(s, img)
-                    and np.array_equal(p, img)
-                )
-                flat = img.astype(np.int64)
-                rows.append(
-                    {
-                        "media_id": int(doc_id),
-                        "width": w,
-                        "height": 6,
-                        "formats_agree": bool(agree),
-                        "px_sum": int(flat.sum()),
-                        "px_min": int(flat.min()),
-                        "px_max": int(flat.max()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "formats_agree",
-                    "px_sum", "px_min", "px_max",
-                ],
-            )
+        bs = text.encode("utf-8")
+        w = max(1, min(len(bs) // 18, 64))
+        img = np.frombuffer(bs[: w * 18], dtype=np.uint8).reshape(6, w, 3)
+        r = decode_ras(encode_ras(img, rle=True))
+        s = decode_sgi(encode_sgi(img, rle=True))
+        p = decode_pnm(encode_pnm(img, 6))
+        agree = (
+            np.array_equal(r, img)
+            and np.array_equal(s, img)
+            and np.array_equal(p, img)
+        )
+        flat = img.astype(np.int64)
+        yield (
+            int(doc_id), w, 6, bool(agree),
+            int(flat.sum()), int(flat.min()), int(flat.max()),
+        )
 
-    return docs.repartition(8).mapInPandas(
-        kernel,
-        schema=(
-            "media_id long, width int, height int,"
-            " formats_agree boolean, px_sum long, px_min int,"
-            " px_max int"
-        ),
+    return map_rows(
+        docs.repartition(8),
+        "media_id long, width int, height int,"
+        " formats_agree boolean, px_sum long, px_min int,"
+        " px_max int",
+        row,
     )
 
 
@@ -1791,51 +1584,27 @@ def media_exr_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir)
     docs = t.documents.select("doc_id", "text")
 
-    def kernel(batches):
+    def row(doc_id, text):
         import numpy as np
-        import pandas as pd
 
         from ..operators.exr import decode_exr, encode_exr
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                bs = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                w = max(1, min(len(bs) // 12, 64))
-                img = (
-                    bs[: w * 12].reshape(4, w, 3).astype(np.float32)
-                    / 256.0
-                )
-                dec, nm = decode_exr(encode_exr(img, ["R", "G", "B"],
-                                                "zip"))
-                back = np.stack(
-                    [dec[:, :, nm.index(c)] for c in "RGB"], axis=2
-                )
-                ints = np.round(back * 256.0).astype(np.int64)
-                rows.append(
-                    {
-                        "media_id": int(doc_id),
-                        "width": w,
-                        "height": 4,
-                        "lossless": bool(np.array_equal(back, img)),
-                        "px_sum": int(ints.sum()),
-                        "px_max": int(ints.max()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "lossless",
-                    "px_sum", "px_max",
-                ],
-            )
+        bs = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
+        w = max(1, min(len(bs) // 12, 64))
+        img = bs[: w * 12].reshape(4, w, 3).astype(np.float32) / 256.0
+        dec, nm = decode_exr(encode_exr(img, ["R", "G", "B"], "zip"))
+        back = np.stack([dec[:, :, nm.index(c)] for c in "RGB"], axis=2)
+        ints = np.round(back * 256.0).astype(np.int64)
+        yield (
+            int(doc_id), w, 4, bool(np.array_equal(back, img)),
+            int(ints.sum()), int(ints.max()),
+        )
 
-    return docs.repartition(8).mapInPandas(
-        kernel,
-        schema=(
-            "media_id long, width int, height int, lossless boolean,"
-            " px_sum long, px_max int"
-        ),
+    return map_rows(
+        docs.repartition(8),
+        "media_id long, width int, height int, lossless boolean,"
+        " px_sum long, px_max int",
+        row,
     )
 
 
@@ -1948,29 +1717,18 @@ def media_ogg_flac_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def wrap(batches):
+    def wrap(media_id, content):
         import numpy as np
-        import pandas as pd
 
         from ..operators.flac import encode_flac
         from ..operators.oggflac import mux_ogg_flac
 
-        for pdf in batches:
-            out = []
-            for b in pdf["content"]:
-                samples = np.frombuffer(bytes(b), dtype="<i2")
-                out.append(
-                    mux_ogg_flac(
-                        encode_flac(
-                            samples, sample_rate=16000, blocksize=64
-                        )
-                    )
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "content": out}
-            )
+        samples = np.frombuffer(bytes(content), dtype="<i2")
+        yield media_id, mux_ogg_flac(
+            encode_flac(samples, sample_rate=16000, blocksize=64)
+        )
 
-    ogg = pcm.mapInPandas(wrap, schema="media_id long, content binary")
+    ogg = map_rows(pcm, "media_id long, content binary", wrap)
     feats = decode_audio_features(
         ogg, content_col="content", id_col="media_id", fake=False
     )
@@ -2006,7 +1764,7 @@ def media_ogg_flac_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "probe", "audio", "metadata"),
 )
 def media_id3_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ID3v2 metadata extraction over an audio corpus (round 10): per
+    """ID3v2 metadata extraction over an audio corpus: per
     sampled document, build an ID3v2.3-tagged MP3 (tag fields derived
     from the document, spec-valid MPEG frames after it — the decode
     tier refuses perceptual audio, the METADATA tier must still read
@@ -2023,9 +1781,7 @@ def media_id3_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring("text", 1, 12).alias("title"),
     )
 
-    def kernel(batches):
-        import pandas as pd
-
+    def row(doc_id, lang, source, title):
         from ..operators.multimodal import (
             encode_id3v2_stub,
             encode_mpeg_audio_stub,
@@ -2033,52 +1789,32 @@ def media_id3_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
             probe_media,
         )
 
-        for pdf in batches:
-            rows = []
-            for doc_id, lang, source, title in zip(
-                pdf["doc_id"], pdf["lang"], pdf["source"], pdf["title"]
-            ):
-                tag = encode_id3v2_stub(
-                    {
-                        "TIT2": str(title),
-                        "TPE1": str(source),
-                        "TALB": f"lang-{lang}",
-                        "TRCK": str(int(doc_id) % 30 + 1),
-                    }
-                )
-                buf = tag + encode_mpeg_audio_stub(n_frames=3, xing=True)
-                got = parse_id3v2(buf)
-                p = probe_media(buf)
-                rows.append(
-                    {
-                        "media_id": int(doc_id),
-                        "title": got.get("TIT2"),
-                        "artist": got.get("TPE1"),
-                        "album": got.get("TALB"),
-                        "track": int(got.get("TRCK", "0")),
-                        "codec": p["codec"],
-                        "n_frames": p["n_frames"],
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "title", "artist", "album", "track",
-                    "codec", "n_frames",
-                ],
-            )
+        tag = encode_id3v2_stub(
+            {
+                "TIT2": str(title),
+                "TPE1": str(source),
+                "TALB": f"lang-{lang}",
+                "TRCK": str(int(doc_id) % 30 + 1),
+            }
+        )
+        buf = tag + encode_mpeg_audio_stub(n_frames=3, xing=True)
+        got = parse_id3v2(buf)
+        p = probe_media(buf)
+        yield (
+            int(doc_id), got.get("TIT2"), got.get("TPE1"), got.get("TALB"),
+            int(got.get("TRCK", "0")), p["codec"], p["n_frames"],
+        )
 
-    return docs.repartition(8).mapInPandas(
-        kernel,
-        schema=(
-            "media_id long, title string, artist string, album string,"
-            " track long, codec string, n_frames long"
-        ),
+    return map_rows(
+        docs.repartition(8),
+        "media_id long, title string, artist string, album string,"
+        " track long, codec string, n_frames long",
+        row,
     )
 
 
 # --------------------------------------------------------------------------
-# perceptual (difference-hash) cross-format image dedup (r11): the
+# perceptual (difference-hash) cross-format image dedup: the
 # image-side near-dup family. Byte-level dedup (media_content_dedup)
 # cannot see that a PNG, a QOI and a BMP of the SAME pixels are one
 # image; a perceptual hash over DECODED pixels can. The fixture
@@ -2158,11 +1894,10 @@ def media_dhash_cross_format_dedup(
         (F.col("doc_id") % _DH_KEYS).alias("k"),
         (F.col("doc_id") % 3).alias("fmt"),
     )
-    from ..operators.multimodal import media_dhash_kernel
+    from ..operators.multimodal import MEDIA_DHASH_SCHEMA, media_dhash_row
 
-    hashed = docs.repartition(8).mapInPandas(
-        media_dhash_kernel(_DH_SIDE),
-        schema="media_id long, fmt long, dhash long, blob_md5 string",
+    hashed = map_rows(
+        docs.repartition(8), MEDIA_DHASH_SCHEMA, media_dhash_row(_DH_SIDE)
     )
     return hashed.groupBy("dhash").agg(
         F.count("*").alias("n_media"),

@@ -3013,13 +3013,6 @@ _GR_ROUNDS = 3      #: unrolled expansion rounds after entry seeding
 _GR_ENTRY = 8       #: entry points: vec_id < this (fixed, deterministic)
 _GR_K = 5           #: neighbors returned
 _GR_QCUT = 8        #: query vectors: vec_id < this
-#: A/B flag (r13): localCheckpoint each intermediate beam round.
-#: False = one fused plan per search; each round references the
-#: previous beam twice (carry + expand), but both references are the
-#: SAME subtree, so within the one action ReuseExchange executes each
-#: round's shuffle once — trading R-1 checkpoint jobs (plus their
-#: broadcast-build jobs) for a deeper, reused plan.
-_GR_BEAM_CKPT = True
 
 
 def _graph_build_ctes(g: str, corpus: str) -> str:
@@ -3496,7 +3489,7 @@ def _graph_beam(t, edges: DataFrame,
         )
         cands = beam.select("query_id", "node").union(nbrs)
         beam = rescore(cands)
-        if _GR_BEAM_CKPT and r < _GR_ROUNDS - 1:
+        if r < _GR_ROUNDS - 1:
             # the last beam flows straight into the caller's final
             # top-k window
             beam = beam.localCheckpoint()

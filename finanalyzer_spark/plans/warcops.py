@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..operators.rows import map_rows
 from .registry import query
 
 #: page template (ASCII; fixture text has no &<>"' so escape == id)
@@ -41,68 +42,59 @@ def _page_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return t.documents.select("doc_id", "source", "text")
 
 
-def _build_and_parse(pdf_iter, emit):
-    """Shared kernel: documents batch -> WARC bytes -> parsed records
-    -> `emit(row_dict, records, expected)` rows."""
-    import html as _html
+def _warc_rows(emit):
+    """Row function over (doc_id, source, text): wrap the document in
+    real WARC bytes, parse them back and yield what
+    `emit(row_dict, records)` yields."""
 
-    import pandas as pd
+    def row(doc_id, source, text):
+        import html as _html
 
-    from ..operators.warc import (
-        build_http_request,
-        build_http_response,
-        parse_warc,
-        write_warc,
-        write_warc_record,
-    )
-
-    for pdf in pdf_iter:
-        out = []
-        for doc_id, source, text in zip(
-            pdf["doc_id"], pdf["source"], pdf["text"]
-        ):
-            host = f"{source}.example.com"
-            uri = f"https://{host}/{doc_id}"
-            title = f"doc {doc_id}"
-            page = (
-                _HTML_PREFIX
-                + title
-                + _HTML_MID
-                + title
-                + _HTML_MID2
-                + _html.escape(text, quote=False)
-                + _HTML_SUFFIX
-            )
-            req = write_warc_record(
-                "request",
-                build_http_request(f"/{doc_id}", host),
-                uri=uri,
-                content_type="application/http; msgtype=request",
-            )
-            resp = write_warc_record(
-                "response",
-                build_http_response(page.encode("utf-8")),
-                uri=uri,
-            )
-            warc = write_warc([req, resp], gzip_members=True)
-            records = list(parse_warc(warc))
-            out.extend(
-                emit(
-                    {
-                        "doc_id": int(doc_id),
-                        "source": source,
-                        "text": text,
-                        "host": host,
-                        "uri": uri,
-                        "title": title,
-                    },
-                    records,
-                )
-            )
-        yield pd.DataFrame(
-            out,
-            columns=list(out[0].keys()) if out else None,
+        from ..operators.warc import (
+            build_http_request,
+            build_http_response,
+            parse_warc,
+            write_warc,
+            write_warc_record,
         )
+
+        host = f"{source}.example.com"
+        uri = f"https://{host}/{doc_id}"
+        title = f"doc {doc_id}"
+        page = (
+            _HTML_PREFIX
+            + title
+            + _HTML_MID
+            + title
+            + _HTML_MID2
+            + _html.escape(text, quote=False)
+            + _HTML_SUFFIX
+        )
+        req = write_warc_record(
+            "request",
+            build_http_request(f"/{doc_id}", host),
+            uri=uri,
+            content_type="application/http; msgtype=request",
+        )
+        resp = write_warc_record(
+            "response",
+            build_http_response(page.encode("utf-8")),
+            uri=uri,
+        )
+        warc = write_warc([req, resp], gzip_members=True)
+        yield from emit(
+            {
+                "doc_id": int(doc_id),
+                "source": source,
+                "text": text,
+                "host": host,
+                "uri": uri,
+                "title": title,
+            },
+            list(parse_warc(warc)),
+        )
+
+    return row
 
 
 @query(
@@ -139,34 +131,27 @@ def html_extraction_report(docs: DataFrame) -> DataFrame:
     parity with the batch answer is pinned in
     tests/test_streaming.py)."""
 
-    def kernel(batches):
+    def emit(row, records):
         from urllib.parse import urlparse
 
         from ..operators.warc import extract_html_text, split_http_response
 
-        def emit(row, records):
-            resp = next(r for r in records if r["type"] == "response")
-            status, headers, body = split_http_response(resp["block"])
-            title, text = extract_html_text(body.decode("utf-8"))
-            ok = (
-                status == 200
-                and headers.get("content-type", "").startswith("text/html")
-                and title == row["title"]
-                and text == row["title"] + row["text"]
-                and urlparse(resp["uri"]).hostname == row["host"]
-            )
-            yield {
-                "host": urlparse(resp["uri"]).hostname,
-                "n_docs": 1,
-                "n_extract_ok": int(ok),
-                "body_chars": len(text),
-            }
+        resp = next(r for r in records if r["type"] == "response")
+        status, headers, body = split_http_response(resp["block"])
+        title, text = extract_html_text(body.decode("utf-8"))
+        ok = (
+            status == 200
+            and headers.get("content-type", "").startswith("text/html")
+            and title == row["title"]
+            and text == row["title"] + row["text"]
+            and urlparse(resp["uri"]).hostname == row["host"]
+        )
+        yield urlparse(resp["uri"]).hostname, 1, int(ok), len(text)
 
-        yield from _build_and_parse(batches, emit)
-
-    rows = docs.mapInPandas(
-        kernel,
-        schema="host string, n_docs long, n_extract_ok long, body_chars long",
+    rows = map_rows(
+        docs,
+        "host string, n_docs long, n_extract_ok long, body_chars long",
+        _warc_rows(emit),
     )
     return rows.groupBy("host").agg(
         F.sum("n_docs").alias("n_docs"),
@@ -217,19 +202,14 @@ def warc_record_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     record count and total content-block bytes (as DECLARED by
     Content-Length and as delivered — the parser enforces both)."""
 
-    def kernel(batches):
-        def emit(row, records):
-            for r in records:
-                yield {
-                    "rtype": r["type"],
-                    "n_records": 1,
-                    "block_bytes": len(r["block"]),
-                }
+    def emit(row, records):
+        for r in records:
+            yield r["type"], 1, len(r["block"])
 
-        yield from _build_and_parse(batches, emit)
-
-    rows = _page_rows(spark, sf_dir).repartition("source").mapInPandas(
-        kernel, schema="rtype string, n_records long, block_bytes long"
+    rows = map_rows(
+        _page_rows(spark, sf_dir).repartition("source"),
+        "rtype string, n_records long, block_bytes long",
+        _warc_rows(emit),
     )
     return rows.groupBy("rtype").agg(
         F.sum("n_records").alias("n_records"),

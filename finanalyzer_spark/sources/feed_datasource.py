@@ -34,12 +34,40 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from .fetcher import FakeFeed
+from .fetcher import HISTORY_SCHEMA, FakeFeed
 
-FEED_SCHEMA = (
-    "ticker string, date_value string, open double, high double, "
-    "low double, close double"
-)
+
+def _parse_options(options: dict) -> tuple[list[str], dt.date, dt.date, float]:
+    """(tickers, start, end, wait_secs): the options both readers take.
+    `start` and `end` are inclusive ISO dates."""
+    tickers = options.get("tickers", "")
+    if not tickers:
+        raise ValueError("fake_feed requires option 'tickers' (csv list)")
+    start, end = options.get("start"), options.get("end")
+    if not (start and end):
+        raise ValueError("fake_feed requires options 'start' and 'end'")
+    return (
+        [t.strip() for t in tickers.split(",") if t.strip()],
+        dt.date.fromisoformat(start),
+        dt.date.fromisoformat(end),
+        float(options.get("wait_secs", "0")),
+    )
+
+
+def _history_rows(ticker: str, lo: dt.date, hi: dt.date, wait_secs: float):
+    """One partition's rows: the feed's history of `ticker` over
+    [lo, hi], after the reference's inter-request throttle."""
+    if wait_secs:
+        time.sleep(wait_secs)
+    for row in FakeFeed().history(ticker, lo, hi).itertuples(index=False):
+        yield (
+            ticker,
+            row.date_value,
+            float(row.open),
+            float(row.high),
+            float(row.low),
+            float(row.close),
+        )
 
 
 class FeedDataSource(DataSource):
@@ -58,7 +86,7 @@ class FeedDataSource(DataSource):
         return "fake_feed"
 
     def schema(self) -> str:
-        return FEED_SCHEMA
+        return HISTORY_SCHEMA
 
     def reader(self, schema) -> "FeedReader":
         return FeedReader(self.options)
@@ -69,38 +97,14 @@ class FeedDataSource(DataSource):
 
 class FeedReader(DataSourceReader):
     def __init__(self, options: dict):
-        tickers = options.get("tickers", "")
-        if not tickers:
-            raise ValueError("fake_feed requires option 'tickers' (csv list)")
-        self.tickers = [t.strip() for t in tickers.split(",") if t.strip()]
-        self.start = options.get("start")
-        self.end = options.get("end")
-        if not (self.start and self.end):
-            raise ValueError("fake_feed requires options 'start' and 'end'")
-        self.wait_secs = float(options.get("wait_secs", "0"))
+        self.tickers, self.start, self.end, self.wait_secs = _parse_options(options)
 
     def partitions(self) -> list[InputPartition]:
         # one partition per ticker — fetch parallelism == ticker count
         return [InputPartition(t) for t in self.tickers]
 
     def read(self, partition: InputPartition):
-        if self.wait_secs:
-            time.sleep(self.wait_secs)  # reference inter-request throttle
-        feed = FakeFeed()
-        hist = feed.history(
-            partition.value,
-            dt.date.fromisoformat(self.start),
-            dt.date.fromisoformat(self.end),
-        )
-        for row in hist.itertuples(index=False):
-            yield (
-                partition.value,
-                row.date_value,
-                float(row.open),
-                float(row.high),
-                float(row.low),
-                float(row.close),
-            )
+        return _history_rows(partition.value, self.start, self.end, self.wait_secs)
 
 
 class FeedStreamReader(DataSourceStreamReader):
@@ -121,19 +125,10 @@ class FeedStreamReader(DataSourceStreamReader):
     loss) until it catches up via the max() in _bump."""
 
     def __init__(self, options: dict):
-        tickers = options.get("tickers", "")
-        if not tickers:
-            raise ValueError("fake_feed requires option 'tickers' (csv list)")
-        self.tickers = [t.strip() for t in tickers.split(",") if t.strip()]
-        start, end = options.get("start"), options.get("end")
-        if not (start and end):
-            raise ValueError("fake_feed requires options 'start' and 'end'")
-        self.start = dt.date.fromisoformat(start)
-        self.end = dt.date.fromisoformat(end)
+        self.tickers, self.start, self.end, self.wait_secs = _parse_options(options)
         # clamp: 0/negative would pin latestOffset forever (a stream
         # that never makes progress and never finishes)
         self.days_per_batch = max(1, int(options.get("days_per_batch", "1")))
-        self.wait_secs = float(options.get("wait_secs", "0"))
         self._cursor: dt.date | None = None
 
     def _bump(self, day: dt.date) -> None:
@@ -163,21 +158,10 @@ class FeedStreamReader(DataSourceStreamReader):
         return [InputPartition((t, *span)) for t in self.tickers]
 
     def read(self, partition: InputPartition):
-        if self.wait_secs:
-            time.sleep(self.wait_secs)  # reference inter-request throttle
         ticker, lo, hi = partition.value
-        hist = FakeFeed().history(
-            ticker, dt.date.fromisoformat(lo), dt.date.fromisoformat(hi)
+        return _history_rows(
+            ticker, dt.date.fromisoformat(lo), dt.date.fromisoformat(hi), self.wait_secs
         )
-        for row in hist.itertuples(index=False):
-            yield (
-                ticker,
-                row.date_value,
-                float(row.open),
-                float(row.high),
-                float(row.low),
-                float(row.close),
-            )
 
     def commit(self, end: dict) -> None:
         # offsets live in the engine's checkpoint; the feed is

@@ -251,21 +251,23 @@ def fetch_history(
 def fetch_info(tasks: DataFrame, feed: FakeFeed | None = None) -> DataFrame:
     """Parallel fundamentals fetch with the null→0 coercion applied in
     the kernel (reference dataAcquisition.py:54-67)."""
+    # imported here: a worker unpickling the feed imports this module,
+    # and should not import the operators package with it
+    from ..operators.rows import map_rows
+
     feed = feed or FakeFeed()
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                day = dt.date.fromisoformat(str(row.as_of))
-                info = feed.info(row.ticker, day)
-                rec = {"ticker": row.ticker, "date_value": day.isoformat()}
-                for c in FUNDAMENTALS:
-                    rec[c] = float(info.get(c, 0.0))  # null→0 sentinel
-                out.append(rec)
-            if out:
-                yield pd.DataFrame(out)
+    def row(ticker, as_of):
+        day = dt.date.fromisoformat(str(as_of))
+        info = feed.info(ticker, day)
+        yield (
+            ticker,
+            day.isoformat(),
+            *(float(info.get(c, 0.0)) for c in FUNDAMENTALS),  # null→0 sentinel
+        )
 
-    return tasks.select(
-        F.col("ticker").cast("string"), F.col("as_of").cast("string")
-    ).mapInPandas(kernel, schema=INFO_SCHEMA)
+    return map_rows(
+        tasks.select(F.col("ticker").cast("string"), F.col("as_of").cast("string")),
+        INFO_SCHEMA,
+        row,
+    )

@@ -16,46 +16,28 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.rows import map_rows
+
 
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
     """(archive, record_no, rtype, uri, date, content_type, block)
     for every record of every WARC file under `path`."""
     files = spark.read.format("binaryFile").load(path)
 
-    def explode_records(batches):
-        import pandas as pd
-
+    def explode_records(fpath, content):
         from ..operators.warc import parse_warc
 
-        for pdf in batches:
-            rows = []
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                for i, rec in enumerate(parse_warc(bytes(content))):
-                    rows.append(
-                        {
-                            "archive": fpath,
-                            "record_no": i,
-                            "rtype": rec["type"],
-                            "uri": rec["uri"],
-                            "date": rec["date"],
-                            "content_type": rec["content_type"],
-                            "block": rec["block"],
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "archive", "record_no", "rtype", "uri", "date",
-                    "content_type", "block",
-                ],
+        for i, rec in enumerate(parse_warc(bytes(content))):
+            yield (
+                fpath, i, rec["type"], rec["uri"], rec["date"],
+                rec["content_type"], rec["block"],
             )
 
-    return files.select("path", "content").mapInPandas(
+    return map_rows(
+        files.select("path", "content"),
+        "archive string, record_no long, rtype string, uri string,"
+        " date string, content_type string, block binary",
         explode_records,
-        schema=(
-            "archive string, record_no long, rtype string, uri string,"
-            " date string, content_type string, block binary"
-        ),
     )
 
 
@@ -65,52 +47,30 @@ def read_warc_pages(spark: SparkSession, path: str) -> DataFrame:
     and non-response records are dropped in the kernel."""
     files = spark.read.format("binaryFile").load(path)
 
-    def extract_pages(batches):
-        import pandas as pd
-
+    def extract_pages(fpath, content):
         from ..operators.warc import (
             extract_html_text,
             parse_warc,
             split_http_response,
         )
 
-        for pdf in batches:
-            rows = []
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                for rec in parse_warc(bytes(content)):
-                    if rec["type"] != "response":
-                        continue
-                    try:
-                        status, headers, body = split_http_response(
-                            rec["block"]
-                        )
-                    except ValueError:
-                        continue
-                    if not headers.get("content-type", "").startswith(
-                        "text/html"
-                    ):
-                        continue
-                    title, text = extract_html_text(
-                        body.decode("utf-8", errors="replace")
-                    )
-                    rows.append(
-                        {
-                            "archive": fpath,
-                            "uri": rec["uri"],
-                            "status": status,
-                            "title": title,
-                            "text": text,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["archive", "uri", "status", "title", "text"],
+        for rec in parse_warc(bytes(content)):
+            if rec["type"] != "response":
+                continue
+            try:
+                status, headers, body = split_http_response(rec["block"])
+            except ValueError:
+                continue
+            if not headers.get("content-type", "").startswith("text/html"):
+                continue
+            title, text = extract_html_text(
+                body.decode("utf-8", errors="replace")
             )
+            yield fpath, rec["uri"], status, title, text
 
-    return files.select("path", "content").mapInPandas(
+    return map_rows(
+        files.select("path", "content"),
+        "archive string, uri string, status int, title string,"
+        " text string",
         extract_pages,
-        schema=(
-            "archive string, uri string, status int, title string,"
-            " text string"
-        ),
     )

@@ -457,10 +457,10 @@ def lsh_candidate_increments(
 
 
 # --------------------------------------------------------------------------
-# Streaming perceptual media dedup (VERDICT r11 #7): the crawl-increment
+# Streaming perceptual media dedup: the crawl-increment
 # form of plans/multimodal.media_dhash_cross_format_dedup — new blobs
-# arrive, each is decoded and difference-hashed by the SAME Arrow kernel
-# the batch query runs (operators/multimodal.media_dhash_kernel), and a
+# arrive, each is decoded and difference-hashed by the SAME row function
+# the batch query runs (operators/multimodal.media_dhash_row), and a
 # per-hash survivor state answers "perceptually new or dup?" at arrival
 # time. The media analog of incremental_ingest_dedup.
 # --------------------------------------------------------------------------
@@ -536,17 +536,15 @@ def dhash_dedup_increments(
     verdict is final because a hash's survivor never changes once
     elected (min-id within the first micro-batch that carries it,
     earlier micro-batches always win)."""
-    from ..operators.multimodal import media_dhash_kernel
+    from ..operators.multimodal import MEDIA_DHASH_SCHEMA, media_dhash_row
+    from ..operators.rows import map_rows
 
     media = docs.select(
         F.col("doc_id").alias("media_id"),
         (F.col("doc_id") % keys).alias("k"),
         (F.col("doc_id") % 3).alias("fmt"),
     )
-    hashed = media.mapInPandas(
-        media_dhash_kernel(side),
-        schema="media_id long, fmt long, dhash long, blob_md5 string",
-    )
+    hashed = map_rows(media, MEDIA_DHASH_SCHEMA, media_dhash_row(side))
     return hashed.groupBy("dhash").applyInPandasWithState(
         _update_dhash_group,
         outputStructType=DHASH_DEDUP_OUTPUT_SCHEMA,

@@ -98,24 +98,21 @@ def test_components_raise_when_max_iter_exhausted(spark):
 
 
 def test_broadcast_nodes_auto_gate(spark):
-    """broadcast_nodes=None (default) gates the per-round broadcast
-    hint on a measured node count instead of hinting unconditionally
-    (r11, ADVICE): small graphs broadcast, over-cap counts fall back
-    to shuffle joins, explicit True/False always win."""
+    """The per-round broadcast hint is gated on a measured node count
+    instead of given unconditionally: small graphs broadcast, over-cap
+    counts fall back to shuffle joins."""
     from finanalyzer_spark.operators.components import (
         BROADCAST_NODE_CAP,
         connected_components,
         resolve_broadcast_nodes,
     )
 
-    assert resolve_broadcast_nodes(None, 10) is True
-    assert resolve_broadcast_nodes(None, BROADCAST_NODE_CAP) is True
-    assert resolve_broadcast_nodes(None, BROADCAST_NODE_CAP + 1) is False
-    assert resolve_broadcast_nodes(True, BROADCAST_NODE_CAP + 1) is True
-    assert resolve_broadcast_nodes(False, 10) is False
+    assert resolve_broadcast_nodes(10) is True
+    assert resolve_broadcast_nodes(BROADCAST_NODE_CAP) is True
+    assert resolve_broadcast_nodes(BROADCAST_NODE_CAP + 1) is False
 
-    # default (auto) path still converges on a small graph, for every
-    # loop operator that now auto-gates
+    # the gated path still converges on a small graph, for every loop
+    # operator that gates
     from finanalyzer_spark.operators.graph import (
         kcore,
         label_propagation_fixed,
