@@ -86,23 +86,29 @@ def upsert_frame(
 
 
 def recover_swap(path: str) -> None:
-    """Finish a swap that crashed between `overwrite_atomic`'s two
-    renames: with `path` missing and exactly one `<path>.old-*` beside
-    it, the parked table is the last committed version, so it is renamed
-    back. Without this the table reads as absent, and the next refresh
-    re-fetches its whole history from the feed.
+    """Clean up after a crashed `overwrite_atomic` of `path`. A swap
+    that crashed between the two renames leaves `path` missing and
+    exactly one `<path>.old-*` beside it: the parked table is the last
+    committed version, so it is renamed back. Without this the table
+    reads as absent, and the next refresh re-fetches its whole history
+    from the feed. Any `<path>.tmp-*` staging dir is an uncommitted
+    write (a crash inside the staged write, or before its promote) and
+    is removed.
 
     It cannot tell a crashed swap from one still running: between the
     renames of a live `overwrite_atomic`, `path` is missing and one
     `.old-*` exists, and renaming it back would make the writer's
-    promote fail. So it assumes a single writer whose calls run in
-    sequence, with no read, probe or second merge of `path` overlapping
-    a swap of it — the contract of the plain-parquet store (FinStore)."""
-    if os.path.exists(path):
-        return
-    olds = glob.glob(glob.escape(path) + ".old-*")
-    if len(olds) == 1:
-        os.rename(olds[0], path)
+    promote fail; a live staged write owns its `.tmp-*`. So it assumes a
+    single writer whose calls run in sequence, with no read, probe or
+    second merge of `path` overlapping a swap of it — the contract of
+    the plain-parquet store (FinStore)."""
+    pattern = glob.escape(path)
+    if not os.path.exists(path):
+        olds = glob.glob(pattern + ".old-*")
+        if len(olds) == 1:
+            os.rename(olds[0], path)
+    for tmp in glob.glob(pattern + ".tmp-*"):
+        shutil.rmtree(tmp)
 
 
 def overwrite_atomic(df: DataFrame, path: str) -> None:
@@ -116,7 +122,7 @@ def overwrite_atomic(df: DataFrame, path: str) -> None:
     # Rename-aside swap: park the live dir, promote the staged one, then
     # reclaim. The table-missing window is a single rename (not a full
     # rmtree), and a crash between the renames leaves `.old-*` intact,
-    # which `recover_swap` promotes back. Nothing may read or probe
+    # which `recover_swap` promotes back (and drops the stage). Nothing may read or probe
     # `path` inside that window: a `recover_swap` there would undo the
     # park and make the promote below fail (single writer, calls in
     # sequence).

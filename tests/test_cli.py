@@ -6,12 +6,15 @@ subprocess smoke proves the module wiring.
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
 from finanalyzer_spark.__main__ import main
 
 from .conftest import SF_DIR_ORACLE
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_cli_queries_lists_registry(capsys):
@@ -152,3 +155,32 @@ def test_bench_diff_jitter_suppression(tmp_path):
     assert "FLAG jittery" not in res.stdout
     assert "steady" not in res.stdout
     assert "1 flagged" in res.stdout
+
+
+def test_perf_pairs_verdict_and_drift_flags():
+    """scripts/perf_pairs.py: a gain needs >= 9/10 pair wins AND a median
+    gap wider than the parent's IQR; a pair whose two runs both sit far
+    past their side's median, the same way, is flagged as host drift."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "perf_pairs", os.path.join(REPO, "scripts", "perf_pairs.py")
+    )
+    pp = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(pp)
+
+    parent = [2.0, 2.1, 2.2, 1.9, 2.05, 2.15, 1.95, 2.0, 2.1, 2.2]
+    faster = [p - 0.4 for p in parent]
+    assert pp.verdict(list(zip(parent, faster)), higher=False) == "gain"
+    assert pp.verdict(list(zip(parent, faster)), higher=True) == "loss"
+    # 10/10 wins, but the gap (0.05) is inside the parent's IQR
+    assert pp.verdict([(p, p - 0.05) for p in parent], higher=False) == "unresolved"
+    # a wide gap, but only 8/10 wins
+    mixed = faster[:8] + [p + 0.1 for p in parent[8:]]
+    assert pp.verdict(list(zip(parent, mixed)), higher=False) == "unresolved"
+
+    # pair 4: the host slowed both runs; pair 7: only the change's run
+    slow = list(zip(parent, faster))
+    slow[3] = (5.0, 4.6)
+    slow[6] = (slow[6][0], 4.6)
+    assert pp.drifted(slow) == [3]

@@ -289,7 +289,7 @@ def test_overwrite_atomic_crash_between_renames_keeps_both_versions(
     new = spark.createDataFrame([(2, "v2")], "k long, v string")
     import pytest as _pytest
 
-    with _pytest.raises(OSError, match="injected crash"):
+    with pytest.raises(OSError, match="injected crash"):
         merge_mod.overwrite_atomic(new, path)
     monkeypatch.undo()
 
@@ -327,7 +327,7 @@ def test_overwrite_atomic_crash_between_renames_keeps_both_versions(
     n0 = fill_all_history(store, day0, FakeFeed()).count()
     calls.clear()
     monkeypatch.setattr(merge_mod.os, "rename", crashing_rename)
-    with _pytest.raises(OSError, match="injected crash"):
+    with pytest.raises(OSError, match="injected crash"):
         update_history(store, day0 + dt.timedelta(days=2), FakeFeed())
     monkeypatch.undo()
     assert not _os.path.exists(store.path("history"))
@@ -369,6 +369,48 @@ def test_overwrite_atomic_crash_during_staging_leaves_target_untouched(
     with _pytest.raises(Exception, match="boom during stage write"):
         overwrite_atomic(bad, path)
     assert spark.read.parquet(path).collect()[0]["v"] == "keep"
+
+
+def test_merge_into_reclaims_the_stage_of_a_crashed_swap(spark, tmp_path, monkeypatch):
+    """A driver that dies inside the staged write leaves part of
+    `<path>.tmp-*` behind (a failed Spark job cleans its output up, a
+    dead driver does not); the next merge removes it
+    (merge.recover_swap) and merges into the pre-crash rows."""
+    import os
+
+    from finanalyzer_spark.pipeline.merge import merge_into
+
+    path = str(tmp_path / "tbl")
+    schema = "k long, v string"
+    spark.createDataFrame([(1, "a"), (2, "b")], schema).write.parquet(path)
+
+    frame = type(spark.range(1))
+    real_write = frame.write
+
+    class CrashingWriter:
+        def __init__(self, df):
+            self.df = df
+
+        def mode(self, _):
+            return self
+
+        def parquet(self, stage):
+            real_write.__get__(self.df.limit(1)).parquet(stage)  # part lands
+            raise OSError("injected crash inside the staged write")
+
+    def stages():
+        return [e for e in os.listdir(tmp_path) if e.startswith("tbl.tmp-")]
+
+    monkeypatch.setattr(frame, "write", property(CrashingWriter))
+    with pytest.raises(OSError, match="injected crash"):
+        merge_into(spark, path, spark.createDataFrame([(2, "B")], schema), ["k"])
+    monkeypatch.undo()
+    assert len(stages()) == 1
+    assert sorted(spark.read.parquet(path).collect()) == [(1, "a"), (2, "b")]
+
+    merged = merge_into(spark, path, spark.createDataFrame([(3, "c")], schema), ["k"])
+    assert stages() == []
+    assert sorted(merged.collect()) == [(1, "a"), (2, "b"), (3, "c")]
 
 
 def test_overwrite_atomic_self_read(spark, tmp_path):
